@@ -18,12 +18,16 @@ iteration on src, which is the textbook Pregel cost.
 
 Plan diet (mirrors operators/pagerank.py round-7/8 hardening): the
 edge frame is repartitioned on src and localCheckpointed ONCE before
-the loop, and the node-scale labels frame is localCheckpointed every
-round — labels feeds BOTH the vote join and the keep-old-label
-fallback, so without the per-round pin the lineage doubles each
-iteration (measured: 116 static exchanges for K=4 un-pinned vs ~6
-pinned). Per-round materialization of a node-scale frame is the
-standard Pregel superstep barrier.
+the loop, so rounds scan the pin instead of the source. The pin does
+not keep hashpartitioning(src): with AQE on (the session.py default)
+the checkpointed scan reports UnknownPartitioning(0), so each round's
+vote join re-shuffles the edge list on src (see operators/pagerank.py).
+The node-scale labels frame is localCheckpointed every round — labels
+feeds BOTH the vote join and the keep-old-label fallback, so without
+the per-round pin the lineage doubles each iteration (measured: 116
+static exchanges for K=4 un-pinned vs ~6 pinned). Per-round
+materialization of a node-scale frame is the standard Pregel superstep
+barrier.
 
 No reference counterpart (the reference has no graph operators); this
 completes the graph family next to pagerank/sssp/kcore/triangles/bfs.

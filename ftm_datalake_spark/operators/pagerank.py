@@ -17,13 +17,14 @@ uniform), hash-agg on dst — the canonical distributed PageRank step.
 
 Plan diet (round 7, hardened round 8): the degree table is joined into
 the edge frame ONCE, before the loop, and the combined (src, dst,
-outdeg) frame is explicitly repartitioned on src and localCheckpointed
-— the repartition guarantees the checkpointed scan satisfies the
-per-iteration join's hashpartitioning(src) requirement even when the
-degree join chose a broadcast (which would otherwise leave the edge
-frame's original partitioning in place). Each unrolled iteration then
-reads the checkpointed scan instead of re-deriving distinct+degree+join
-from scratch. This cut the static plan from 85 exchanges / 46
+outdeg) frame is repartitioned on src and localCheckpointed. Each
+unrolled iteration then reads the checkpointed scan instead of
+re-deriving distinct+degree+join from scratch. The pin does NOT carry
+hashpartitioning(src) into the loop: with AQE on (the session.py
+default) the checkpointed scan reports UnknownPartitioning(0) on Spark
+4.1, eager or lazy, with or without a partition count, so every
+iteration's join still shuffles the edge frame on src. Only AQE off
+keeps the partitioning. This cut the static plan from 85 exchanges / 46
 broadcasts (pre-rewrite, PLAN_AUDIT.md r6) to 12 exchanges / 1
 broadcast at sf0.001 (regenerated PLAN_AUDIT.md r8); the budget is
 CI-locked in tests/test_plan_shapes.py::test_pagerank_plan_budget. The rank agg
@@ -51,13 +52,13 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 5) -> DataFrame:
     """
     edges = edges.select("src", "dst").distinct()
     deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # Pin (src, dst, outdeg) once: repartition on src so the pinned
-    # frame provably carries hashpartitioning(src) (the degree join may
-    # broadcast deg, which would otherwise preserve edges' original
-    # partitioning), then localCheckpoint to materialize it and truncate
-    # lineage. Every unrolled iteration scans the checkpointed RDD
-    # shuffle-free on its side of the join instead of re-deriving
-    # distinct+degree+join (same policy as sssp.py/kcore.py).
+    # Pin (src, dst, outdeg) once: localCheckpoint materializes it and
+    # truncates lineage, so every unrolled iteration scans the
+    # checkpointed RDD instead of re-deriving distinct+degree+join (same
+    # policy as sssp.py/kcore.py). The repartition on src does not
+    # survive the pin under AQE (the scan reports UnknownPartitioning,
+    # see module docstring): each iteration's join re-shuffles this
+    # frame on src.
     edges_deg = (
         edges.join(deg, "src").repartition("src").localCheckpoint(eager=False)
     )

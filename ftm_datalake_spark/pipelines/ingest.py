@@ -174,7 +174,7 @@ def read_documents(spark: SparkSession, lake_dir: str, dataset: str) -> DataFram
 
     path = os.path.join(lake_dir, "documents")
     try:
-        df = spark.read.parquet(path)
+        df = spark.read.schema(DOCUMENTS_SCHEMA).parquet(path)
         return df.where(F.col("dataset") == dataset)
     except Exception:
         return spark.createDataFrame([], DOCUMENTS_SCHEMA)
@@ -397,8 +397,11 @@ def publish(spark: SparkSession, lake_dir: str) -> dict:
     from ftm_datalake_spark.sources.sinks import write_index_json
 
     from ftm_datalake_spark.functions.mime import SCHEMA_LABELS
+    from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA
 
-    docs = spark.read.parquet(_os.path.join(lake_dir, "documents"))
+    docs = spark.read.schema(DOCUMENTS_SCHEMA).parquet(
+        _os.path.join(lake_dir, "documents")
+    )
     rows = dataset_index(docs, project_entities(docs)).collect()
     entries = []
     for row in sorted(rows, key=lambda r: r["dataset"]):

@@ -107,16 +107,57 @@ DATASET_INDEX_SCHEMA = T.StructType(
     ]
 )
 
-# Driver-provided synthetic test tables (TESTDATA.md)
-TEST_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+
+_I, _L, _D, _S = T.IntegerType(), T.LongType(), T.DoubleType(), T.StringType()
+_NTZ, _TS = T.TimestampNTZType(), T.TimestampType()
+
+
+def _columns(*cols: tuple[str, T.DataType]) -> T.StructType:
+    # all nullable: a parquet scan reports every column nullable anyway
+    return T.StructType([T.StructField(n, t, True) for n, t in cols])
+
+
+# Driver-provided synthetic test tables (TESTDATA.md), declared so a scan
+# needs no footer-inference job. ``o_orderdate``/``l_shipdate`` stay
+# TIMESTAMP_NTZ (the parquet physical type; only compared and truncated).
+# ``events.ts`` is declared TIMESTAMP, which unix_micros call sites need:
+# Spark reads the naive ``timestamp[us]`` test data into it as UTC wall
+# time (the same values as an NTZ read cast under the session's pinned UTC
+# zone, and DuckDB's naive ``epoch_us``) and zone-aware data unchanged.
+# tests/test_schema_drift.py checks these against the inferred schemas.
+TEST_TABLE_SCHEMAS = {
+    "region": _columns(("r_regionkey", _I), ("r_name", _S)),
+    "nation": _columns(("n_nationkey", _I), ("n_name", _S), ("n_regionkey", _I)),
+    "customer": _columns(
+        ("c_custkey", _L), ("c_name", _S), ("c_nationkey", _I),
+        ("c_acctbal", _D), ("c_mktsegment", _S),
+    ),
+    "supplier": _columns(
+        ("s_suppkey", _L), ("s_name", _S), ("s_nationkey", _I), ("s_acctbal", _D)
+    ),
+    "part": _columns(
+        ("p_partkey", _L), ("p_name", _S), ("p_brand", _S), ("p_type", _S),
+        ("p_size", _I), ("p_retailprice", _D),
+    ),
+    "orders": _columns(
+        ("o_orderkey", _L), ("o_custkey", _L), ("o_orderstatus", _S),
+        ("o_totalprice", _D), ("o_orderdate", _NTZ), ("o_orderpriority", _S),
+    ),
+    "lineitem": _columns(
+        ("l_orderkey", _L), ("l_partkey", _L), ("l_suppkey", _L),
+        ("l_linenumber", _I), ("l_quantity", _D), ("l_extendedprice", _D),
+        ("l_discount", _D), ("l_tax", _D), ("l_returnflag", _S),
+        ("l_linestatus", _S), ("l_shipdate", _NTZ),
+    ),
+    "events": _columns(
+        ("event_id", _L), ("ts", _TS), ("user_id", _L), ("event_type", _S),
+        ("value", _D), ("props", _S),
+    ),
+    "documents": _columns(
+        ("doc_id", _L), ("text", _S), ("lang", _S), ("source", _S), ("n_chars", _L)
+    ),
+    "embeddings": _columns(
+        ("vec_id", _L), ("embedding", T.ArrayType(T.FloatType(), True)), ("label", _I)
+    ),
+}
+TEST_TABLES = tuple(TEST_TABLE_SCHEMAS)

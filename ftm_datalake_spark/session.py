@@ -8,6 +8,13 @@ dataset-partitioned parquet, but work unchanged on local[N]:
 - Arrow on: every pandas_udf / mapInPandas stage moves batches, not rows.
 - Shuffle partitions default to 2x cores locally; on a real cluster AQE
   coalesces from a deliberately high initial number instead.
+- Generated code is cached for the whole session: Spark's default cache
+  holds 100 compiled classes, but one pass of the benchmark's query
+  workload compiles about 140 and one lake cycle about 170, so with the
+  default every repeat of a query recompiled all of them.
+  1000 entries hold several such passes. Peak RSS (driver JVM plus
+  client, 1 GB heap, local[4]) measured flat against the default: median
+  2006 → 1971 MB on the query workload, 1817 → 1812 MB on the lake cycle.
 """
 
 from __future__ import annotations
@@ -45,6 +52,9 @@ def build_session(
         # 128 MB scan splits keep task counts sane at 100 TB while still
         # giving local[32] enough parallelism at bench scale.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
+        # Generated-code cache sized for the session (module docstring).
+        # Static conf: only takes effect when this call starts the context.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

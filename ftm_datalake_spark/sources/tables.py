@@ -5,8 +5,9 @@ S3 csv scan (reference: ftm_datalake/archive/documents.py:45-50),
 S4 json point read (reference: ftm_datalake/archive/dataset.py:43-45),
 and the driver's synthetic parquet tables.
 
-All readers take explicit schemas — schema inference is a full extra pass
-over the data, which is unacceptable at 100 TB.
+All readers take explicit schemas: inference costs a Spark job on every
+read (a footer pass for parquet, a full pass over the data for CSV/JSON),
+which is unacceptable at 100 TB and dominates short queries at bench scale.
 """
 
 from __future__ import annotations
@@ -15,33 +16,21 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA, FILE_INFO_SCHEMA, TEST_TABLES
+from ftm_datalake_spark.schemas import (
+    DOCUMENTS_SCHEMA,
+    FILE_INFO_SCHEMA,
+    TEST_TABLE_SCHEMAS,
+    TEST_TABLES,
+)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver-provided parquet table (TESTDATA.md).
-
-    ``events.ts`` has drifted across driver data generations:
-    TIMESTAMP(NANOS) (rejected by Spark's reader — read as nanos-long via
-    the legacy conf and truncate to micros), and plain ``timestamp[us]``
-    with no timezone, which Spark ≥3.4 reads as TIMESTAMP_NTZ. Normalize
-    both to session-tz TIMESTAMP: the session timezone is pinned UTC
-    (session.py), so the NTZ→TIMESTAMP cast is value-preserving and
-    matches DuckDB's naive-timestamp ``epoch_us`` semantics.
-    """
-    from pyspark.sql import functions as F
-
+    """Load one driver-provided parquet table (TESTDATA.md) with its
+    declared schema (``schemas.TEST_TABLE_SCHEMAS``), so the read runs no
+    Spark job. ``events.ts`` is declared TIMESTAMP; see schemas.py for
+    why that reads naive and zone-aware parquet timestamps alike."""
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
-    return spark.read.parquet(path)
+    return spark.read.schema(TEST_TABLE_SCHEMAS[name]).parquet(path)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
