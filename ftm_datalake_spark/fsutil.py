@@ -98,57 +98,13 @@ def dir_has_data(spark: SparkSession, uri: str) -> bool:
 def dir_committed(spark: SparkSession, uri: str) -> bool:
     """True iff ``uri`` holds a COMPLETED direct parquet write: data
     files present AND the job-commit ``_SUCCESS`` marker. The stricter
-    probe for idempotence markers (ledger ``gen=`` partitions): a crash
-    during job commit can leave some renamed part files without
-    ``_SUCCESS``, and a re-delivery must treat that as not-written and
-    overwrite, not skip."""
+    probe for idempotence markers (generation-ledger generations,
+    pipelines/genledger.py): a crash during job commit can leave some
+    renamed part files without ``_SUCCESS``, and a re-delivery must
+    treat that as not-written and overwrite, not skip."""
     return dir_has_data(spark, uri) and exists(
         spark, uri.rstrip("/") + "/_SUCCESS"
     )
-
-
-def committed_ledger_paths(
-    spark: SparkSession, ledger_dir: str
-) -> tuple[list[str], list[str]]:
-    """Split a generation-partitioned ledger directory into readable
-    paths and uncommitted generation names: ``(read_paths,
-    uncommitted_gens)``.
-
-    The ledger layout (classifier tokledger, export segledger /
-    sigledger) is ``gen=base`` from the full build plus one
-    ``gen=<delta_id>`` per fold. A generation is COMMITTED iff its
-    directory carries its own ``_SUCCESS`` job marker — except
-    ``gen=base``, whose ``partitionBy`` write commits at the ledger
-    ROOT, so root ``_SUCCESS`` also vouches for it. Legacy flat layouts
-    (part files directly under the root, predating the marker
-    protocol) are always readable.
-
-    Readers and compactions consume only the committed paths: a
-    crashed append's half-written ``gen=`` partition is invisible
-    until its re-delivery overwrites it, so partial counts are never
-    served, never folded into ``gen=base``, and never double-counted
-    when the re-delivery lands (ADVICE r9 #1/#4)."""
-    fs, root, _ = hadoop_fs(spark, ledger_dir)
-    if not fs.exists(root):
-        return [], []
-    root_success = exists(spark, ledger_dir.rstrip("/") + "/_SUCCESS")
-    paths: list[str] = []
-    uncommitted: list[str] = []
-    for status in fs.listStatus(root):
-        name = status.getPath().getName()
-        if name.startswith(("_", ".")):
-            continue
-        child = ledger_dir.rstrip("/") + "/" + name
-        if status.isDirectory() and name.startswith("gen="):
-            if dir_committed(spark, child) or (
-                name == "gen=base" and root_success and dir_has_data(spark, child)
-            ):
-                paths.append(child)
-            else:
-                uncommitted.append(name[len("gen="):])
-        elif status.isDirectory() or name.endswith(".parquet"):
-            paths.append(child)  # legacy flat layout, pre-marker
-    return paths, uncommitted
 
 
 def replace_dir(spark: SparkSession, target: str, staged: str) -> None:

@@ -39,10 +39,13 @@ from urllib.parse import urlparse
 from ftm_datalake_spark import fsutil
 
 
-def _pafs_for(uri: str):
+def pyarrow_fs_for(uri: str):
     """(pyarrow FileSystem, in-fs path) for URIs pyarrow resolves
-    WITHOUT a JVM, else None. Intentionally the same probe the blob
-    archive's task tier uses (sources/archive._pyarrow_fs_for)."""
+    WITHOUT a JVM (gs://, hdfs:// with libhdfs, ...), else None — the
+    one probe shared by this module's generic tier and the task-side
+    writers (sources/archive.py, sources/sinks.py). pyarrow FileSystem
+    objects pickle, so a resolved client can cross the task boundary
+    inside a foreachPartition closure."""
     try:
         import pyarrow.fs as pafs
 
@@ -69,7 +72,7 @@ def _tier(uri: str):
         return ("local", fsutil.strip_file_scheme(uri))
     if scheme == "s3":
         return ("s3", None)
-    resolved = _pafs_for(uri)
+    resolved = pyarrow_fs_for(uri)
     if resolved is not None:
         return ("pafs", resolved)
     return ("jvm", None)

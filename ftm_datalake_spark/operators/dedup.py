@@ -182,16 +182,16 @@ def lsh_bands(
 
 
 def minhash_lsh_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
+    postings: DataFrame,
     num_hashes: int = 12,
     rows_per_band: int = 3,
     materialize_bands: bool = True,
-    postings: DataFrame | None = None,
 ) -> DataFrame:
-    """Candidate near-duplicate pairs: docs sharing ≥1 LSH band.
+    """Candidate near-duplicate pairs: docs sharing ≥1 LSH band, from a
+    (doc_id, shingle) postings frame (:func:`shingle_postings`). Callers
+    that also consume the shingle table (e.g. dedup_lsh_recall's exact
+    ground-truth side) pass their already-pinned postings, so the
+    scan+tokenize+explode subtree is shared instead of re-derived.
 
     `materialize_bands` (r14, guide §2.4): the band table ends in the
     whole signature pipeline (scan → shingle explode → 12-way min
@@ -200,14 +200,7 @@ def minhash_lsh_pairs(
     the signatures were computed twice (8 parquet scans in the before
     plan). One localCheckpoint of the narrow (doc_id, band_id,
     band_val) relation feeds both sides; registry callers must be
-    tagged checkpointed=True.
-
-    `postings` (r15, guide §2.4): callers that ALSO consume the shingle
-    table (e.g. dedup_lsh_recall's exact ground-truth side) pass their
-    already-pinned (doc_id, shingle) frame so the scan+tokenize+explode
-    subtree is shared instead of re-derived here."""
-    if postings is None:
-        postings = shingle_postings(df, text_col, id_col, k)
+    tagged checkpointed=True."""
     bands = lsh_bands(
         minhash_signatures(postings, num_hashes), num_hashes, rows_per_band
     )

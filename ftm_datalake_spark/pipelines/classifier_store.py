@@ -2,23 +2,21 @@
 
 The classifier's whole training state is the (label, token, cnt)
 occurrence-count frame (operators/classifier.token_counts) — counts
-from disjoint corpora SUM, so the persisted model is a mergeable
-count ledger in the same generation layout as the training export's
-segment ledger (pipelines/training_export.py segledger/):
-
-    <model_dir>/tokledger/gen=base/        full-build counts
-    <model_dir>/tokledger/gen=<delta_id>/  one partition per folded delta
+from disjoint corpora SUM, so the persisted model is a generation
+ledger (pipelines/genledger.py) at ``<model_dir>/tokledger/``: a base
+from the full build plus one generation per folded delta, merged by
+summing ``cnt`` on (label, token).
 
 Contracts (all law-tested in tests/test_classifier_store.py):
 - O(|delta|): an append scans ONLY the delta — never re-reads the
   corpus or the existing ledger (the gen partition is additive).
 - Idempotent re-delivery: the delta's deterministic identity
-  (training_export._delta_id — count + xor of distinct doc-id hashes)
-  names its generation; a re-delivered batch sees its gen= partition
-  already present and no-ops.
+  (genledger.delta_gen_id — count + xor of distinct doc-id hashes)
+  names its generation; a re-delivered batch sees its generation
+  already committed and no-ops.
 - incremental == full: model(build(C) + append(Δ)) is frame-identical
   to model(build(C ∪ Δ)).
-- Compaction is invisible: folding all generations into gen=base
+- Compaction is invisible: folding all generations into the base
   changes file counts only, never the derived model.
 
 At 100 TB this is the fasttext-style quality/language filter kept
@@ -40,11 +38,11 @@ from ftm_datalake_spark.operators.classifier import (
     token_counts,
     token_vote_predict,
 )
-from ftm_datalake_spark.pipelines.training_export import _delta_id
+from ftm_datalake_spark.pipelines.genledger import GenLedger, delta_gen_id
 
-
-def _ledger_dir(model_dir: str) -> str:
-    return os.path.join(model_dir, "tokledger")
+TOK_LEDGER = GenLedger(
+    "tokledger", "label string, token string, cnt long", ("label", "token")
+)
 
 
 def build_classifier_model(
@@ -54,17 +52,12 @@ def build_classifier_model(
     label_col: str = "lang",
     text_col: str = "text",
 ) -> int:
-    """Full build: write the training corpus's counts as ``gen=base``.
-    Returns the distinct (label, token) row count."""
+    """Full build: write the training corpus's counts as the ledger's
+    base. Returns the distinct (label, token) row count."""
     counts = token_counts(train_docs, label_col, text_col).localCheckpoint(
         eager=True
     )
-    (
-        counts.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(_ledger_dir(model_dir))
-    )
+    TOK_LEDGER.write_base(spark, model_dir, counts)
     return counts.count()
 
 
@@ -79,52 +72,24 @@ def append_classifier_model(
     token explosion + hash-agg over the delta, one new gen partition.
     Re-delivering the same delta (by doc-id identity) is a no-op.
     Returns {delta_id, rows_appended, skipped}."""
-    delta_id = _delta_id(delta_docs)
-    gen_dir = os.path.join(_ledger_dir(model_dir), f"gen={delta_id}")
-    # dir_committed, not dir_has_data: a crash during the gen write's
-    # job commit can leave part files without _SUCCESS — re-delivery
-    # must overwrite that half-written generation, never skip it
-    if fsutil.dir_committed(spark, gen_dir):
-        return {"delta_id": delta_id, "rows_appended": 0, "skipped": True}
-    counts = token_counts(delta_docs, label_col, text_col).localCheckpoint(
-        eager=True
-    )
-    counts.write.mode("overwrite").parquet(gen_dir)
+    delta_id = delta_gen_id(delta_docs)
+    # lazy pin: nothing runs when the generation is already committed;
+    # otherwise the write materializes it and the count reads the pin
+    counts = token_counts(delta_docs, label_col, text_col).localCheckpoint()
+    skipped = TOK_LEDGER.append(spark, model_dir, delta_id, counts)
     return {
         "delta_id": delta_id,
-        "rows_appended": counts.count(),
-        "skipped": False,
+        "rows_appended": 0 if skipped else counts.count(),
+        "skipped": skipped,
     }
-
-
-def _committed_count_files(spark: SparkSession, model_dir: str) -> list[str]:
-    """Readable ledger paths: committed generations + legacy flat
-    files only. An UNCOMMITTED gen (crashed append: part files, no
-    ``_SUCCESS``) is excluded — serving it would expose partial counts
-    mid-recovery, and folding it into ``gen=base`` before its
-    re-delivery lands would double-count the delta once the re-delivery
-    appends the full counts (ADVICE r9 #1/#4)."""
-    path = fsutil.heal_dir(spark, _ledger_dir(model_dir))
-    paths, _ = fsutil.committed_ledger_paths(spark, path)
-    return paths
 
 
 def read_classifier_counts(spark: SparkSession, model_dir: str) -> DataFrame:
     """Canonical (label, token, cnt) view across all COMMITTED
     generations — one hash-agg merge on the (label, token) key (counts
-    are additive). Heals a crashed compaction swap first
-    (fsutil.heal_dir) and skips uncommitted ``gen=`` partitions, so a
-    crash at any point in an append/compact cycle never loses, serves
-    partially, or double-counts a delta."""
-    paths = _committed_count_files(spark, model_dir)
-    if not paths:
-        return spark.createDataFrame([], "label string, token string, cnt long")
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .groupBy("label", "token")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
+    are additive); a crash at any point in an append/compact cycle
+    never loses, serves partially, or double-counts a delta."""
+    return TOK_LEDGER.read(spark, model_dir)
 
 
 def read_classifier_model(spark: SparkSession, model_dir: str) -> DataFrame:
@@ -153,8 +118,8 @@ def stream_classifier_deltas(
     :func:`append_classifier_model` — the same composition as the
     export's :func:`~ftm_datalake_spark.pipelines.training_export.
     stream_training_deltas`. Exactly-once per delta without relying on
-    the sink checkpoint alone: the append's ``gen=<delta_id>`` marker
-    makes a replayed micro-batch a no-op, so checkpoint recovery
+    the sink checkpoint alone: the append's committed ``<delta_id>``
+    generation makes a replayed micro-batch a no-op, so checkpoint recovery
     (which may re-deliver the in-flight batch) cannot double-count
     tokens. Schema comes from a sample read of the drop directory's
     first file at stream start, so drifted drops fail loudly at the
@@ -204,7 +169,7 @@ def predict_from_store(
     model = model_from_counts(
         read_classifier_counts(spark, model_dir), min_count=min_count
     )
-    _, nbytes = fsutil.du(spark, _ledger_dir(model_dir))
+    _, nbytes = fsutil.du(spark, TOK_LEDGER.path(model_dir))
     fits = nbytes <= max_broadcast_bytes
     return token_vote_predict(
         model,
@@ -223,7 +188,7 @@ def classifier_model_stats(spark: SparkSession, model_dir: str) -> dict:
       part files per fold) — ``compact_classifier_ledger`` when these
       grow;
     - ``appended_fraction``: share of token mass that arrived after
-      gen=base — the distribution-drift proxy (a model whose counts
+      the base build — the distribution-drift proxy (a model whose counts
       are mostly post-base deltas was effectively trained on a corpus
       the base build never saw; refresh the base);
     - vocab/label shape: distinct tokens and labels, total token mass.
@@ -233,34 +198,9 @@ def classifier_model_stats(spark: SparkSession, model_dir: str) -> dict:
     Only COMMITTED generations are counted (same read set as
     :func:`read_classifier_counts`); ``uncommitted_generations`` > 0
     flags a crashed append whose re-delivery is still outstanding —
-    do not compact while it is nonzero. Legacy flat-layout files (no
-    ``gen=`` component in their path) count as ``base``, not as a
-    phantom appended generation."""
-    ledger = fsutil.heal_dir(spark, _ledger_dir(model_dir))
-    paths, uncommitted = fsutil.committed_ledger_paths(spark, ledger)
-    if not paths:
-        return {
-            "token_mass": 0,
-            "appended_mass": 0,
-            "appended_fraction": 0.0,
-            "vocab": 0,
-            "labels": 0,
-            "generations": 0,
-            "files": 0,
-            "uncommitted_generations": len(uncommitted),
-        }
-    rows = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .withColumn("f", F.input_file_name())
-        .withColumn(
-            "gen",
-            F.when(
-                F.regexp_extract("f", r"gen=([^/]+)", 1) == "", F.lit("base")
-            ).otherwise(F.regexp_extract("f", r"gen=([^/]+)", 1)),
-        )
-    )
-    agg = rows.agg(
+    do not compact while it is nonzero. Legacy flat-layout files count
+    as ``base``, not as a phantom appended generation."""
+    agg = TOK_LEDGER.read_tagged(spark, model_dir).agg(
         F.sum("cnt").cast("long").alias("token_mass"),
         F.sum(F.when(F.col("gen") != "base", F.col("cnt")).otherwise(0))
         .cast("long")
@@ -268,8 +208,9 @@ def classifier_model_stats(spark: SparkSession, model_dir: str) -> dict:
         F.countDistinct("token").cast("long").alias("vocab"),
         F.countDistinct("label").cast("long").alias("labels"),
         F.countDistinct("gen").cast("long").alias("generations"),
-        F.countDistinct("f").cast("long").alias("files"),
+        F.countDistinct("file").cast("long").alias("files"),
     ).first()
+    uncommitted = TOK_LEDGER.uncommitted(spark, model_dir)
     mass = int(agg["token_mass"] or 0)
     appended = int(agg["appended_mass"] or 0)
     return {
@@ -285,33 +226,7 @@ def classifier_model_stats(spark: SparkSession, model_dir: str) -> dict:
 
 
 def compact_classifier_ledger(spark: SparkSession, model_dir: str) -> int:
-    """Fold all COMMITTED generations into one ``gen=base`` — bounds
-    the small-file growth of repeated appends; the derived model is
-    unchanged. Returns the distinct (label, token) row count.
-
-    Safe against a concurrent crashed append: an uncommitted ``gen=``
-    partition (no ``_SUCCESS``) is excluded from the merge by
-    :func:`read_classifier_counts`, and the swap discards its partial
-    files along with the old ledger — since its marker never
-    committed, the delta's re-delivery appends the FULL counts exactly
-    once (no partial fold + full re-append double count, ADVICE r9 #1).
-
-    Crash-safe: the merged ledger is staged to a sibling directory and
-    swapped in with :func:`fsutil.replace_dir` (a truncating overwrite
-    of the live ledger would have a window where a crash loses ALL
-    counts); a crashed swap is healed on the next read through
-    :func:`fsutil.heal_dir`."""
-    ledger = _ledger_dir(model_dir)
-    merged = read_classifier_counts(spark, model_dir).localCheckpoint(
-        eager=True
-    )
-    staged = ledger.rstrip("/") + ".__new__"
-    fsutil.delete(spark, staged)
-    (
-        merged.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(staged)
-    )
-    fsutil.replace_dir(spark, ledger, staged)
-    return merged.count()
+    """Fold all COMMITTED generations into one base — bounds the
+    small-file growth of repeated appends; the derived model is
+    unchanged. Returns the distinct (label, token) row count."""
+    return TOK_LEDGER.compact(spark, model_dir)

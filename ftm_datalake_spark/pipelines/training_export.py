@@ -31,6 +31,12 @@ Outputs under ``out_dir``:
 - ``manifest.json``            — per-stage counts + config (the export
                                  is a pure function of (corpus, config,
                                  seed): same inputs, same manifest)
+- ``segledger/``, ``sigledger/`` — segment counts and per-doc clean
+                                 signatures as generation ledgers
+                                 (pipelines/genledger.py): what
+                                 :func:`export_training_incremental`
+                                 reads and appends instead of
+                                 rescanning the corpus
 - ``epochs/epoch=S/...``       — optional extra epochs
                                  (:func:`export_epoch_maps`): per-seed
                                  assignment + chunk maps over the SAME
@@ -55,6 +61,17 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ftm_datalake_spark.pipelines.genledger import GenLedger
+from ftm_datalake_spark.pipelines.genledger import delta_gen_id as _delta_id
+
+# The export's two generation ledgers (pipelines/genledger.py): segment
+# counts sum across generations; sig rows are disjoint (each doc_id is
+# processed by exactly one fold), so they merge by plain union.
+SEG_LEDGER = GenLedger("segledger", "seg_key string, n long", ("seg_key",))
+SIG_LEDGER = GenLedger(
+    "sigledger", "doc_id bigint, clean_sig string, exported boolean", None
+)
 
 
 def export_training(
@@ -121,12 +138,7 @@ def export_training(
     from ftm_datalake_spark.operators.textops import segment_frequencies
 
     freq = segment_frequencies(kept).localCheckpoint(eager=True)
-    (
-        freq.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(os.path.join(out_dir, "segledger"))
-    )
+    SEG_LEDGER.write_base(spark, out_dir, freq)
     cleaned = (
         segment_dedup(kept, keep_text=True, freq_table=freq)
         .where(F.col("clean_len") > 0)
@@ -165,30 +177,15 @@ def export_training(
         "shuffle_key"
     ).localCheckpoint()
 
-    # sig LEDGER (sigledger/gen=base): one row per INPUT doc — its
+    # sig LEDGER (sigledger/ base generation): one row per INPUT doc — its
     # cleaned signature (null if it never reached dedup) and whether it
     # shipped. Incremental folds anti-join doc_ids against this (so
     # re-delivered docs, including ones dedup DROPPED, are exactly-once
     # — ADVICE r8 #1a) and take first-write-wins sigs from its exported
     # rows instead of re-hashing the whole corpus text every fold
-    # (ADVICE r8 #3). Same mergeable-generation layout as segledger.
-    (
-        docs.select("doc_id")
-        .join(cleaned.select("doc_id", "clean_sig"), "doc_id", "left")
-        .join(
-            sharded.select("doc_id").withColumn("__exp", F.lit(True)),
-            "doc_id",
-            "left",
-        )
-        .select(
-            "doc_id",
-            "clean_sig",
-            F.coalesce("__exp", F.lit(False)).alias("exported"),
-        )
-        .withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(os.path.join(out_dir, "sigledger"))
+    # (ADVICE r8 #3). Both are generation ledgers (pipelines/genledger.py).
+    SIG_LEDGER.write_base(
+        spark, out_dir, _sig_rows(docs, cleaned, sharded)
     )
     (
         sharded.repartition(n_shards, "shard")
@@ -454,54 +451,24 @@ def export_epoch_maps(
     return {"epochs": stats}
 
 
-def _delta_id(delta_docs: DataFrame) -> str:
-    """Deterministic, order-independent identity of a delta batch:
-    row count + xor of per-doc_id 64-bit hashes (one 1-row aggregate,
-    O(|delta|) compute, O(1) driver). doc_id is the document identity —
-    the corpus contract is append-only (content updates arrive under
-    new ids; existing docs never move shards) — so the id set IS the
-    delta's identity, and a re-delivered batch maps to the same
-    delta_id however it is partitioned or ordered. Hashed over the
-    DISTINCT ids: under xor a doc_id repeated twice would cancel out,
-    letting two different deltas alias (e.g. {1,1,3} vs {2,2,3}) —
-    distinct-first removes that structural collision, and matches the
-    fold's semantics (a doc_id is processed at most once)."""
-    from pyspark.sql import functions as F
-
-    row = (
-        delta_docs.select("doc_id")
-        .distinct()
-        .select(F.xxhash64(F.col("doc_id").cast("string")).alias("h"))
-        .agg(F.count("*").alias("n"), F.bit_xor("h").alias("x"))
-        .first()
-    )
-    x = (row["x"] or 0) & 0xFFFFFFFFFFFFFFFF
-    return f"{int(row['n'])}x{x:016x}"
-
-
-def _read_sig_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
-    """(doc_id, clean_sig, exported) across all COMMITTED sigledger
-    generations. A crashed fold's half-written ``gen=`` partition is
-    excluded: serving its partial doc_ids would make the replayed
-    fold's anti-join skip those docs as "already processed" (silent
-    undercount), and compaction would fold the partials into base
-    before the replay re-lands them (ADVICE r9 #1's latent twin)."""
-    path = fsutil.heal_dir(spark, os.path.join(out_dir, "sigledger"))
-    paths, _ = fsutil.committed_ledger_paths(spark, path)
-    if not paths:
-        # nothing committed yet: empty frame, typed from the raw files
-        # when any exist (uncommitted partials carry the schema)
-        try:
-            raw = spark.read.option("recursiveFileLookup", "true").parquet(path)
-            return raw.select("doc_id", "clean_sig", "exported").limit(0)
-        except Exception:
-            return spark.createDataFrame(
-                [], "doc_id bigint, clean_sig string, exported boolean"
-            )
+def _sig_rows(
+    processed: DataFrame, cleaned: DataFrame, exported: DataFrame
+) -> DataFrame:
+    """Sig-ledger rows: one per processed doc — its cleaned signature
+    (null if it never reached dedup) and whether it shipped."""
     return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .select("doc_id", "clean_sig", "exported")
+        processed.select("doc_id")
+        .join(cleaned.select("doc_id", "clean_sig"), "doc_id", "left")
+        .join(
+            exported.select("doc_id").withColumn("__exp", F.lit(True)),
+            "doc_id",
+            "left",
+        )
+        .select(
+            "doc_id",
+            "clean_sig",
+            F.coalesce("__exp", F.lit(False)).alias("exported"),
+        )
     )
 
 
@@ -521,8 +488,9 @@ def export_training_incremental(
     per-delta idempotence (ADVICE r8 #1): every fold has a
     deterministic ``delta_id`` (order-independent hash of its doc_id
     set); the manifest generation entry carrying that id is the fold's
-    COMMIT RECORD, and both ledgers append under ``gen=<delta_id>``
-    partitions. Replay at every crash point is exactly-once:
+    COMMIT RECORD, and both ledgers append generation ``<delta_id>``
+    (pipelines/genledger.py). Replay at every crash point is
+    exactly-once:
 
     - delta_id already committed in the manifest → pure no-op (even
       when the original fold's docs were ALL dropped by dedup — the
@@ -531,8 +499,9 @@ def export_training_incremental(
       delta's ids, so the replay re-runs the whole deterministic fold
       (shard rewrites are dynamic-overwrite idempotent);
     - crash between ledger appends and the manifest commit → the
-      ``gen=<delta_id>`` partitions exist, so the replay recovers the
-      generation entry from them instead of double-appending counts.
+      ``<delta_id>`` generations are committed, so the replay recovers
+      the generation entry from them instead of double-appending
+      counts.
 
     Fresh docs (anti-joined against the sig ledger's ALL-processed ids,
     not docs/ membership) run the SAME curation chain as the full
@@ -622,18 +591,16 @@ def export_training_incremental(
         _write_manifest(man_path, manifest, spark)
         return manifest
 
-    sig_dir = os.path.join(out_dir, "sigledger")
-    sig_gen_dir = os.path.join(sig_dir, f"gen={delta_id}")
-    seg_gen_dir = os.path.join(out_dir, "segledger", f"gen={delta_id}")
-    if fsutil.dir_committed(spark, sig_gen_dir):
+    gen_rows = SIG_LEDGER.read_gen(spark, out_dir, delta_id)
+    if gen_rows is not None:
         # crash window: ledgers advanced, manifest commit lost. Docs and
         # ledgers are complete (ledger appends happen after the shard
-        # writes; dir_committed requires the gen's own _SUCCESS, so a
+        # writes; read_gen serves committed generations only, so a
         # half-committed gen re-folds instead of recovering from
         # partial counts); reconstruct the generation entry from the
         # ledger gen instead of re-counting the delta into the ledgers
         # (ADVICE r8 #1b's dual: counts must land exactly once).
-        gen_rows = spark.read.parquet(sig_gen_dir).localCheckpoint()
+        gen_rows = gen_rows.localCheckpoint()
         exported_ids = gen_rows.where(F.col("exported")).select("doc_id")
         gen = {
             "delta_id": delta_id,
@@ -665,19 +632,17 @@ def export_training_incremental(
 
     # sig-ledger bootstrap for exports predating it: one corpus pass
     # (ids + shipped-text hash), after which every fold is ledger-only
-    if not _dir_has_data(spark, sig_dir):
-        (
+    if not SIG_LEDGER.present(spark, out_dir):
+        SIG_LEDGER.write_base(
+            spark,
+            out_dir,
             existing.select(
                 "doc_id",
                 F.md5("text").alias("clean_sig"),
                 F.lit(True).alias("exported"),
-            )
-            .withColumn("gen", F.lit("base"))
-            .write.mode("overwrite")
-            .partitionBy("gen")
-            .parquet(sig_dir)
+            ),
         )
-    sig = _read_sig_ledger(spark, out_dir)
+    sig = SIG_LEDGER.read(spark, out_dir)
 
     gen: dict = {"delta_id": delta_id, "delta_input": n_input}
     # ledger skip: doc_ids already PROCESSED (exported or dropped)
@@ -708,24 +673,15 @@ def export_training_incremental(
     # evidence — one corpus scan, no text reassembly.
     from ftm_datalake_spark.operators.textops import segment_frequencies
 
-    ledger_dir = fsutil.heal_dir(spark, os.path.join(out_dir, "segledger"))
     delta_freq = None
-    if _dir_has_data(spark, ledger_dir):
+    if SEG_LEDGER.present(spark, out_dir):
         delta_freq = segment_frequencies(kept).localCheckpoint(eager=True)
         # only the DELTA's seg_keys matter to the delta's cleaning —
         # semi-join the ledger down to them BEFORE the sum, so the fold
         # never runs a corpus-wide aggregate (the ledger scan stays a
         # one-column filtered read; AQE broadcasts the delta's keys)
-        ledger_paths, _ = fsutil.committed_ledger_paths(spark, ledger_dir)
-        raw_ledger = (
-            spark.read.option("recursiveFileLookup", "true").parquet(
-                *ledger_paths
-            )
-            if ledger_paths
-            else spark.createDataFrame([], "seg_key string, n long")
-        )
         freq = (
-            raw_ledger.join(
+            SEG_LEDGER.read_raw(spark, out_dir).join(
                 delta_freq.select("seg_key").distinct(), "seg_key", "left_semi"
             )
             .unionByName(delta_freq)
@@ -832,42 +788,16 @@ def export_training_incremental(
             .parquet(os.path.join(out_dir, "chunks"))
         )
 
-    # advance the ledgers after the shard writes, each under its
-    # gen=<delta_id> partition, skipped when already present — so a
-    # crash at ANY point replays to exactly one generation of counts
-    # (ADVICE r8 #1b), and the manifest write below is the commit
-    # each gen is a DIRECT overwrite write into its own directory (not
-    # an append+partitionBy at the ledger root): the gen then carries
-    # its own _SUCCESS job-commit marker, so fsutil.dir_committed can
-    # tell a completed generation from one whose job commit crashed
-    # half-renamed — the append-at-root form had no per-gen marker and
-    # a partially-committed gen would be skipped on replay (silent
-    # undercount). Readers use recursiveFileLookup, so the layouts are
-    # read-identical.
+    # advance the ledgers after the shard writes, each as generation
+    # <delta_id>, skipped when already committed — so a crash at ANY
+    # point replays to exactly one generation of counts (ADVICE r8
+    # #1b), and the manifest write below is the commit
     if gen["delta_fresh"]:
-        if delta_freq is not None and not fsutil.dir_committed(
-            spark, seg_gen_dir
-        ):
-            delta_freq.write.mode("overwrite").parquet(seg_gen_dir)
-        if not fsutil.dir_committed(spark, sig_gen_dir):
-            (
-                fresh.select("doc_id")
-                .join(
-                    cleaned.select("doc_id", "clean_sig"), "doc_id", "left"
-                )
-                .join(
-                    kept.select("doc_id").withColumn("__exp", F.lit(True)),
-                    "doc_id",
-                    "left",
-                )
-                .select(
-                    "doc_id",
-                    "clean_sig",
-                    F.coalesce("__exp", F.lit(False)).alias("exported"),
-                )
-                .write.mode("overwrite")
-                .parquet(sig_gen_dir)
-            )
+        if delta_freq is not None:
+            SEG_LEDGER.append(spark, out_dir, delta_id, delta_freq)
+        SIG_LEDGER.append(
+            spark, out_dir, delta_id, _sig_rows(fresh, cleaned, kept)
+        )
 
     # manifest totals maintained INCREMENTALLY — O(|Δ| + affected
     # shards), never a corpus rescan (ADVICE r8 #3): disjoint docs make
@@ -898,73 +828,24 @@ def export_training_incremental(
 
 
 def read_segment_ledger(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Canonical (seg_key, n) view of the export's segment ledger.
-    The ledger is stored as mergeable GENERATIONS (``gen=base`` from the
-    full export plus one ``gen=<delta_id>`` partition per committed
-    fold), so the read sums them — one shuffle on the 16-byte hash.
-    Any layout reads (gen partitions, legacy flat, or mixed) — but only
-    COMMITTED generations: a crashed fold's partial ``gen=`` counts are
-    excluded so they are never served or compacted into base before the
-    fold's replay re-lands them in full (ADVICE r9 #1's latent twin).
-    Segment counts are additive, which is what makes O(|delta|)
-    appends sound."""
-    path = fsutil.heal_dir(spark, os.path.join(out_dir, "segledger"))
-    paths, _ = fsutil.committed_ledger_paths(spark, path)
-    if not paths:
-        return spark.createDataFrame([], "seg_key string, n long")
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(*paths)
-        .groupBy("seg_key")
-        .agg(F.sum("n").cast("long").alias("n"))
-    )
+    """Canonical (seg_key, n) view of the export's segment ledger: the
+    committed generations summed on the 16-byte hash. Segment counts
+    are additive, which is what makes O(|delta|) appends sound."""
+    return SEG_LEDGER.read(spark, out_dir)
 
 
 def compact_segment_ledger(spark: SparkSession, out_dir: str) -> int:
-    """Fold all ledger generations into one ``gen=base`` (read → sum →
-    eager checkpoint → overwrite). Run when the generation count grows —
-    reads stay correct without it, just with more files to merge.
-    Returns the distinct segment count. Run BETWEEN folds only: the
-    per-delta gen markers double as crash-recovery breadcrumbs within a
-    fold (their job ends at the fold's manifest commit).
-
-    Crash-safe: staged to a sibling then swapped in with
-    fsutil.replace_dir — a truncating overwrite of the live ledger had
-    a window where a crash after the delete lost every generation; a
-    crashed swap is healed by the next reader (fsutil.heal_dir)."""
-    ledger_dir = os.path.join(out_dir, "segledger")
-    merged = read_segment_ledger(spark, out_dir).localCheckpoint(eager=True)
-    staged = ledger_dir + ".__new__"
-    fsutil.delete(spark, staged)
-    (
-        merged.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(staged)
-    )
-    fsutil.replace_dir(spark, ledger_dir, staged)
-    return merged.count()
+    """Fold the segment ledger's generations into one base; returns the
+    distinct segment count. Run BETWEEN folds only: the per-delta
+    generations double as crash-recovery breadcrumbs within a fold
+    (their job ends at the fold's manifest commit)."""
+    return SEG_LEDGER.compact(spark, out_dir)
 
 
 def compact_sig_ledger(spark: SparkSession, out_dir: str) -> int:
-    """sigledger twin of :func:`compact_segment_ledger`: fold all
-    (doc_id, clean_sig, exported) generations into one ``gen=base``.
-    Rows are disjoint across generations (each doc_id is processed by
-    exactly one fold), so compaction is a plain rewrite, no merge.
-    Returns the processed-doc count. Same staged-swap crash safety as
-    :func:`compact_segment_ledger`."""
-    sig_dir = os.path.join(out_dir, "sigledger")
-    merged = _read_sig_ledger(spark, out_dir).localCheckpoint(eager=True)
-    staged = sig_dir + ".__new__"
-    fsutil.delete(spark, staged)
-    (
-        merged.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(staged)
-    )
-    fsutil.replace_dir(spark, sig_dir, staged)
-    return merged.count()
+    """sigledger twin of :func:`compact_segment_ledger`; returns the
+    processed-doc count."""
+    return SIG_LEDGER.compact(spark, out_dir)
 
 
 def refresh_epoch_maps(spark: SparkSession, out_dir: str) -> dict:

@@ -317,7 +317,9 @@ _BANDS_SQL = _minhash_bands_sql()
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
-    return D.minhash_lsh_pairs(docs).orderBy("doc_a", "doc_b")
+    return D.minhash_lsh_pairs(D.shingle_postings(docs)).orderBy(
+        "doc_a", "doc_b"
+    )
 
 
 # --------------------------------------------------------------------------
@@ -407,11 +409,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
     # r15 (guide §2.4): one pinned shingle table feeds the band build
-    # (via postings=) AND the verification sides + per-doc counts —
+    # AND the verification sides + per-doc counts —
     # before, the scan+tokenize+shingle subtree executed once per
     # consumer (the dedup_lsh_recall fix applied here).
     sh = D.shingle_postings(docs).localCheckpoint(eager=True)
-    cand = D.minhash_lsh_pairs(docs, postings=sh)
+    cand = D.minhash_lsh_pairs(sh)
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -477,7 +479,7 @@ def dedup_families(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ftm_datalake_spark.operators.components import dedup_families as families
 
     docs = _augmented_docs(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs)
+    pairs = D.minhash_lsh_pairs(D.shingle_postings(docs))
     return families(pairs).orderBy("doc_id")
 
 
@@ -521,7 +523,7 @@ def dedup_canonical_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ftm_datalake_spark.operators.components import dedup_families as families
 
     docs = _augmented_docs(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs)
+    pairs = D.minhash_lsh_pairs(D.shingle_postings(docs))
     fam = families(pairs)
     labeled = (
         docs.select("doc_id")
@@ -594,8 +596,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
     # r15 (guide §2.4): ONE pinned shingle table feeds the exact
     # ground-truth side (both halves of the overlap self-join + the
-    # per-doc counts) AND the MinHash band build (passed via
-    # `postings`). Before, the scan+tokenize+shingle-explode subtree
+    # per-doc counts) AND the MinHash band build. Before, the scan+tokenize+shingle-explode subtree
     # executed once per consumer — 32 parquet scans / 42 exchanges in
     # the static plan; after, the corpus is scanned and shingled once.
     sh = D.shingle_postings(docs).localCheckpoint(eager=True)
@@ -627,7 +628,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     cand = (
-        D.minhash_lsh_pairs(docs, postings=sh)
+        D.minhash_lsh_pairs(sh)
         .select("doc_a", "doc_b")
         .localCheckpoint(eager=True)
     )
@@ -692,7 +693,7 @@ def corpus_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ftm_datalake_spark.operators.dedup import shingle_hash
 
     docs = _augmented_docs(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs)
+    pairs = D.minhash_lsh_pairs(D.shingle_postings(docs))
     fam = families(pairs)
     labeled = (
         docs.select("doc_id")
@@ -2008,7 +2009,7 @@ def dedup_minhash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ftm_datalake_spark.operators.components import connected_components
 
     docs = _augmented_docs(spark, sf_dir)
-    pairs = D.minhash_lsh_pairs(docs)
+    pairs = D.minhash_lsh_pairs(D.shingle_postings(docs))
     comp = connected_components(pairs, src="doc_a", dst="doc_b")
     return (
         comp.groupBy("component")

@@ -48,6 +48,7 @@ from urllib.parse import urlparse
 from pyspark.sql import DataFrame
 
 from ftm_datalake_spark.fsutil import strip_file_scheme as _strip_file_scheme
+from ftm_datalake_spark.fsutil_py import pyarrow_fs_for
 from ftm_datalake_spark.functions.checksum import shard_path  # noqa: F401  (expr twin)
 
 
@@ -60,20 +61,6 @@ def _shard(content_hash: str) -> str:
 # filesystem-likes where a crashed writer can leave a truncated file at
 # the written name and must therefore stage + move.
 _ATOMIC_ON_CLOSE = {"s3", "gcs"}
-
-
-def _pyarrow_fs_for(archive_root: str):
-    """Default task-side filesystem resolver: a pyarrow (fs, base_path)
-    pair for URIs pyarrow understands (gs://, hdfs:// with libhdfs…),
-    or None when only the driver's JVM client can resolve the scheme.
-    pyarrow FileSystem objects pickle, so the resolved client crosses
-    the task boundary inside the foreachPartition closure."""
-    try:
-        import pyarrow.fs as pafs
-
-        return pafs.FileSystem.from_uri(archive_root)
-    except Exception:
-        return None
 
 
 def _task_fs_put(fs, target: str, data: bytes) -> None:
@@ -185,7 +172,7 @@ def archive_blobs(
         resolved = (
             task_fs_factory(archive_root)
             if task_fs_factory is not None
-            else _pyarrow_fs_for(archive_root)
+            else pyarrow_fs_for(archive_root)
         )
         if resolved is not None:
             # distributed generic tier: the resolved pure-Python fs
@@ -302,7 +289,7 @@ def archive_blob_bytes(
         resolved = (
             task_fs_factory(archive_root)
             if task_fs_factory is not None
-            else _pyarrow_fs_for(archive_root)
+            else pyarrow_fs_for(archive_root)
         )
         if resolved is not None:
             fs, root_path = resolved

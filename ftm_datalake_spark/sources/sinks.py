@@ -738,12 +738,12 @@ def write_webdataset_shards(
 
     _generic_fs = None
     if scheme not in ("", "file", "s3"):
-        from ftm_datalake_spark.sources.archive import _pyarrow_fs_for
+        from ftm_datalake_spark.fsutil_py import pyarrow_fs_for
 
         _generic_fs = (
             task_fs_factory(out_dir)
             if task_fs_factory is not None
-            else _pyarrow_fs_for(out_dir)
+            else pyarrow_fs_for(out_dir)
         )
 
     if scheme in ("", "file"):

@@ -199,7 +199,7 @@ def _exp_minhash_bands():
         def build(spark, sf_dir):
             docs = load_table(spark, sf_dir, "documents")
             return D.minhash_lsh_pairs(
-                docs, materialize_bands=materialize
+                D.shingle_postings(docs), materialize_bands=materialize
             ).orderBy("doc_a", "doc_b")
 
         return build

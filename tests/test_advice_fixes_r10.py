@@ -5,8 +5,9 @@
    doing so double-counts the delta once its re-delivery lands. The
    read path now serves committed generations only, so the crashed
    partial is invisible, compaction discards it, and the re-delivery
-   appends the full counts exactly once. Same law for the training
-   export's segment/sig ledgers.
+   appends the full counts exactly once. The same laws for all three
+   generation ledgers (export segment/sig, classifier tokens) live in
+   tests/test_gen_ledger.py.
 2. (low) winnow/segment oracles: per-doc series bounds replace the
    constant caps (covered by parity sweeps; here we assert no registry
    oracle carries the old capped idiom).
@@ -20,8 +21,6 @@
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
 
 from ftm_datalake_spark import fsutil
 from ftm_datalake_spark.operators.classifier import (
@@ -193,57 +192,6 @@ def test_no_constant_capped_series_in_oracles():
         sql = " ".join(spec.oracle.split()).lower()
         assert "generate_series(0, 127)" not in sql, name
         assert "generate_series(0, 2047)" not in sql, name
-
-
-def test_segment_ledger_skips_uncommitted_gen(spark, tmp_path):
-    from ftm_datalake_spark.pipelines.training_export import (
-        read_segment_ledger,
-    )
-
-    out = str(tmp_path / "exp")
-    ledger = os.path.join(out, "segledger")
-    base = spark.createDataFrame(
-        [("k1", 2), ("k2", 1)], "seg_key string, n long"
-    )
-    (
-        base.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(ledger)
-    )
-    crashed = spark.createDataFrame([("k1", 5)], "seg_key string, n long")
-    gen_dir = os.path.join(ledger, "gen=delta1")
-    crashed.write.mode("overwrite").parquet(gen_dir)
-    fsutil.delete(spark, gen_dir + "/_SUCCESS")
-    got = {
-        r["seg_key"]: r["n"]
-        for r in read_segment_ledger(spark, out).collect()
-    }
-    assert got == {"k1": 2, "k2": 1}  # crashed gen invisible
-
-
-def test_sig_ledger_skips_uncommitted_gen(spark, tmp_path):
-    from ftm_datalake_spark.pipelines.training_export import _read_sig_ledger
-
-    out = str(tmp_path / "exp")
-    sig = os.path.join(out, "sigledger")
-    base = spark.createDataFrame(
-        [(1, "s1", True)], "doc_id bigint, clean_sig string, exported boolean"
-    )
-    (
-        base.withColumn("gen", F.lit("base"))
-        .write.mode("overwrite")
-        .partitionBy("gen")
-        .parquet(sig)
-    )
-    crashed = spark.createDataFrame(
-        [(2, "s2", True)], "doc_id bigint, clean_sig string, exported boolean"
-    )
-    gen_dir = os.path.join(sig, "gen=delta1")
-    crashed.write.mode("overwrite").parquet(gen_dir)
-    fsutil.delete(spark, gen_dir + "/_SUCCESS")
-    ids = {r["doc_id"] for r in _read_sig_ledger(spark, out).collect()}
-    assert ids == {1}  # the crashed fold's doc must re-enter on replay
 
 
 def test_bpe_encode_broadcast_guard_paths_identical(spark):
