@@ -11,11 +11,12 @@ Spark-first design:
 - J1 is ``unionByName``.
 - J2 is a broadcast left-anti join (the deletion set is always small
   relative to the table; hint it so no shuffle of the big side).
-- J3 is a ``row_number`` window over (key) — one shuffle on the key, which
-  at 100 TB is the unavoidable upsert shuffle. The reference relies on
-  pandas stable sort for ties; we define a total order with explicit
-  tiebreakers (updated_at desc, content_hash desc) so the merge is
-  deterministic under equal timestamps (SURVEY §7.3 hard-part #1).
+- J3 is one ``groupBy(key)`` with ``max_by`` — one shuffle on the key, which
+  at 100 TB is the unavoidable upsert shuffle; the first-archived
+  ``created_at`` (a ``min``) rides in the same aggregation. The reference
+  relies on pandas stable sort for ties; we define a total order with
+  explicit tiebreakers (updated_at desc, content_hash desc) so the merge
+  is deterministic under equal timestamps (SURVEY §7.3 hard-part #1).
 """
 
 from __future__ import annotations
@@ -39,19 +40,29 @@ def latest_wins(df: DataFrame, key_cols: list[str], order_col: str = "updated_at
     (struct comparison ranks null fields lowest, so null order values
     lose exactly as before; the struct itself is never null, so max_by
     never skips a row)."""
-    ord_struct = F.struct(
-        F.col(order_col), *[F.col(c) for c in (tiebreak_cols or [])]
-    )
-    others = [c for c in df.columns if c not in key_cols]
+    return _latest_wins(df, key_cols, order_col, tiebreak_cols or [], {})
+
+
+def _latest_wins(df: DataFrame, key_cols: list[str], order_col: str,
+                 tiebreak_cols: list[str], overrides: dict) -> DataFrame:
+    """latest_wins, with the columns named in ``overrides`` taken from
+    their per-key aggregate instead of the winning row — computed in the
+    same groupBy, so still one exchange."""
+    ord_struct = F.struct(F.col(order_col), *[F.col(c) for c in tiebreak_cols])
+    others = [c for c in df.columns if c not in key_cols and c not in overrides]
     picked = df.groupBy(*[F.col(c) for c in key_cols]).agg(
-        F.max_by(F.struct(*[F.col(c) for c in others]), ord_struct).alias("__w")
+        F.max_by(F.struct(*[F.col(c) for c in others]), ord_struct).alias("__w"),
+        *[agg.alias(f"__o_{c}") for c, agg in overrides.items()],
     )
-    return picked.select(
-        *[
-            F.col(c) if c in key_cols else F.col("__w").getField(c).alias(c)
-            for c in df.columns
-        ]
-    )
+
+    def out(c: str):
+        if c in key_cols:
+            return F.col(c)
+        if c in overrides:
+            return F.col(f"__o_{c}").alias(c)
+        return F.col("__w").getField(c).alias(c)
+
+    return picked.select(*[out(c) for c in df.columns])
 
 
 def merge_documents(
@@ -60,32 +71,25 @@ def merge_documents(
     deleted_keys: DataFrame | None = None,
     key_cols: list[str] | None = None,
 ) -> DataFrame:
-    """Full documents merge: union + anti-delete + latest-wins.
+    """Full documents merge: union + anti-delete + latest-wins, as one
+    aggregation per key.
 
-    ``deleted_keys`` carries just the key columns. Mirrors
-    Documents.write() (reference: ftm_datalake/archive/documents.py:82-117).
+    The winner is the row with the greatest (updated_at, content_hash).
+    ``created_at`` is first-archived time: it is the minimum over every
+    row of the key (nulls skipped), computed in the same groupBy as the
+    winner, so a re-crawled row never advances it (reference keeps the
+    original timestamp, model.py:106-114). ``deleted_keys`` carries just
+    the key columns. Mirrors Documents.write() (reference:
+    ftm_datalake/archive/documents.py:82-117).
     """
     keys = key_cols or ["key"]
     merged = current if added is None else current.unionByName(added)
     if deleted_keys is not None:
         merged = merged.join(F.broadcast(deleted_keys), on=keys, how="left_anti")
-    latest = latest_wins(merged, keys, "updated_at", tiebreak_cols=["content_hash"])
-    if "created_at" in latest.columns:
-        # created_at is first-archived time: latest-wins must not let a
-        # re-crawled row advance it (reference keeps the original
-        # timestamp, model.py:106-114)
-        first_seen = merged.groupBy(*keys).agg(
-            F.min("created_at").alias("__first_created")
-        )
-        latest = (
-            latest.join(first_seen, keys, "left")
-            .withColumn(
-                "created_at",
-                F.coalesce(F.col("__first_created"), F.col("created_at")),
-            )
-            .drop("__first_created")
-        )
-    return latest
+    overrides = (
+        {"created_at": F.min("created_at")} if "created_at" in merged.columns else {}
+    )
+    return _latest_wins(merged, keys, "updated_at", ["content_hash"], overrides)
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -3,8 +3,11 @@
 Reference control flow is producer/consumer threads over an in-process
 queue (anystore Worker); here each lifecycle is ONE declarative plan:
 
-crawl:  binaryFile scan → glob filters → anti-join existing → checksum/
-        mime projection → merge into documents → stats index
+crawl:  metadata listing → glob filters → anti-join existing on
+        (key, size, updated_at) → content scan of the changed files only
+        (one bulk scan when at least half the listing changed, an
+        explicit path list otherwise) → checksum/mime projection → merge
+        into documents. A crawl with nothing changed writes nothing.
 make:   full-outer reconcile of source scan vs metadata table → actions
 
 No task queue, no threads, no per-file IO loops — a 1000-executor cluster
@@ -76,17 +79,7 @@ def crawl_scan(
     # them from a listing pass.
     empties = _empty_files(spark, source_uri)
     if empties is not None:
-        df = df.unionByName(
-            empties.select(
-                "key",
-                F.lit(EMPTY_SHA1).alias("content_hash"),
-                "size",
-                guess_mimetype(F.col("key")).alias("mimetype"),
-                F.col("updated_at").alias("created_at"),
-                "updated_at",
-                F.lit(dataset).alias("dataset"),
-            )
-        )
+        df = df.unionByName(_zero_length_documents(empties, dataset))
     if include:
         df = df.where(F.col("key").rlike(_glob_to_regex(include)))
     if exclude:
@@ -169,15 +162,59 @@ def _empty_files(spark: SparkSession, source_uri: str) -> DataFrame | None:
     )
 
 
+def _zero_length_documents(listing: DataFrame, dataset: str) -> DataFrame:
+    """Zero-length listing rows (key, size, updated_at) → DOCUMENTS_SCHEMA
+    rows: their sha1 is ``EMPTY_SHA1``, so no content is read."""
+    return listing.select(
+        "key",
+        F.lit(EMPTY_SHA1).alias("content_hash"),
+        "size",
+        guess_mimetype(F.col("key")).alias("mimetype"),
+        F.col("updated_at").alias("created_at"),
+        "updated_at",
+        F.lit(dataset).alias("dataset"),
+    )
+
+
+def _empty_documents_table(spark: SparkSession) -> DataFrame:
+    """A typed empty documents table the optimizer can see is empty.
+
+    ``createDataFrame([], schema)`` would be an opaque Python RDD that
+    costs jobs wherever it is used; a zero-row range lets
+    PropagateEmptyRelation fold joins and unions against it at plan
+    time. The non-null ``key`` is cast from the range's non-null id."""
+    from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA
+
+    return spark.range(0).select(
+        *[
+            (
+                F.lit(None).cast(f.dataType)
+                if f.nullable
+                else F.col("id").cast(f.dataType)
+            ).alias(f.name)
+            for f in DOCUMENTS_SCHEMA.fields
+        ]
+    )
+
+
 def read_documents(spark: SparkSession, lake_dir: str, dataset: str) -> DataFrame:
+    """The dataset's rows of the documents table; a lake with no table
+    yet reads as an empty one. Any other read failure (listing,
+    permissions, filesystem) propagates: treating it as empty would make
+    the next crawl re-ingest every file and reset first-archived
+    ``created_at`` values."""
+    from pyspark.errors import AnalysisException
+
     from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA
 
     path = os.path.join(lake_dir, "documents")
     try:
         df = spark.read.schema(DOCUMENTS_SCHEMA).parquet(path)
-        return df.where(F.col("dataset") == dataset)
-    except Exception:
-        return spark.createDataFrame([], DOCUMENTS_SCHEMA)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return _empty_documents_table(spark)
+    return df.where(F.col("dataset") == dataset)
 
 
 def write_documents(documents: DataFrame, lake_dir: str) -> None:
@@ -198,7 +235,8 @@ def crawl(
     include: str | None = None,
     exclude: str | None = None,
 ) -> dict:
-    """Full crawl: scan → skip-existing anti-join → merge → stats.
+    """Full crawl: listing → skip-existing anti-join → content scan of
+    the changed files → merge → write.
 
     Returns the counter dict the reference tracks (A4:
     files_total/added/updated, ftm_datalake/crawl.py:29-30)."""
@@ -215,63 +253,55 @@ def crawl(
         # each crawl; the reference likewise skips *before* fetching,
         # ftm_datalake/crawl.py:67-71.) Metadata-vs-metadata join: both
         # sides are narrow listing rows, no broadcast assumption — the
-        # current table's key set is NOT small at scale.
+        # current table's key set is NOT small at scale. Against an
+        # absent table the optimizer drops the join
+        # (_empty_documents_table).
         current_meta = current.select("key", "size", "updated_at")
         changed = listing.join(
             current_meta, ["key", "size", "updated_at"], "left_anti"
         ).persist()
         n_changed = changed.count()
 
-        if n_changed == 0:
-            from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA
-
-            new_or_changed = spark.createDataFrame([], DOCUMENTS_SCHEMA)
-        elif n_changed >= max(n_total // 2, 1_000_000):
-            # Initial / bulk crawl: most blobs must be read anyway — one
-            # full content scan beats driver-side path bookkeeping. The
-            # semi-join keeps only the changed rows (metadata key), so the
-            # merge shuffle never carries unchanged keys.
-            new_or_changed = crawl_scan(
-                spark, source_uri, dataset, include, exclude
-            ).join(
-                changed.select("key", "size", "updated_at"),
-                ["key", "size", "updated_at"],
-                "left_semi",
+        # Nothing changed: the merge would rewrite the partition with
+        # the rows it already holds, so skip it (as crawl_s3/crawl_http
+        # do). Deleted files are not removed by a crawl either way.
+        if n_changed:
+            # zero-length files were listed without a read (binaryFile
+            # drops them from content scans); only size > 0 is scanned
+            to_read = changed.where(F.col("size") > 0).select(
+                "path", "size", "updated_at"
             )
-        else:
-            # Incremental crawl: read ONLY the changed delta via an
-            # explicit path list. The delta path list is driver-side
-            # metadata of bounded size (≤ the threshold above) — the same
-            # set the reference materializes as its task queue.
-            paths = [
-                r["path"]
-                for r in changed.where(F.col("size") > 0).select("path").collect()
-            ]
-            parts = []
-            if paths:
-                parts.append(
-                    _document_rows(
-                        spark.read.format("binaryFile").load(paths),
-                        source_uri,
-                        dataset,
-                    )
+            if 2 * n_changed >= n_total:
+                # Initial / bulk crawl: at least half the blobs must be
+                # read anyway — one content scan of the source root
+                # beats a path list (binaryFile re-lists a list of more
+                # than parallelPartitionDiscovery.threshold paths in a
+                # job with one task per path). The semi-join on the raw
+                # file columns keeps only the changed rows before any
+                # hashing, so the merge shuffle never carries unchanged
+                # keys.
+                files = scan_binary_files(spark, source_uri).join(
+                    to_read.toDF("path", "length", "modificationTime"),
+                    ["path", "length", "modificationTime"],
+                    "left_semi",
                 )
-            empt = changed.where(F.col("size") == 0).select(
-                "key",
-                F.lit(EMPTY_SHA1).alias("content_hash"),
-                "size",
-                guess_mimetype(F.col("key")).alias("mimetype"),
-                F.col("updated_at").alias("created_at"),
-                "updated_at",
-                F.lit(dataset).alias("dataset"),
+            else:
+                # Incremental crawl: read ONLY the changed files via an
+                # explicit path list. The list is driver-side metadata of
+                # fewer than half the listing's rows — the same set the
+                # reference materializes as its task queue.
+                paths = [r["path"] for r in to_read.select("path").collect()]
+                files = (
+                    spark.read.format("binaryFile").load(paths) if paths else None
+                )
+            new_or_changed = _zero_length_documents(
+                changed.where(F.col("size") == 0), dataset
             )
-            parts.append(empt)
-            new_or_changed = parts[0]
-            for p in parts[1:]:
-                new_or_changed = new_or_changed.unionByName(p)
-
-        merged = merge_documents(current, new_or_changed)
-        write_documents(merged, lake_dir)
+            if files is not None:
+                new_or_changed = _document_rows(
+                    files, source_uri, dataset
+                ).unionByName(new_or_changed)
+            write_documents(merge_documents(current, new_or_changed), lake_dir)
     finally:
         listing.unpersist()
         if changed is not None:

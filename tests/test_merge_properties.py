@@ -162,3 +162,62 @@ def test_incremental_merge_equals_full_aggregation(rows, split_at):
         }
 
     assert canon(merged) == canon(full)
+
+
+def _two_aggregation_merge(current, added, deleted_keys):
+    """The specification of merge_documents: latest-wins, then the
+    first-seen created_at from a second aggregation joined back."""
+    from pyspark.sql import functions as F
+
+    from ftm_datalake_spark.operators.documents import latest_wins
+
+    merged = current.unionByName(added)
+    if deleted_keys is not None:
+        merged = merged.join(F.broadcast(deleted_keys), "key", "left_anti")
+    latest = latest_wins(merged, ["key"], "updated_at", tiebreak_cols=["content_hash"])
+    first_seen = merged.groupBy("key").agg(F.min("created_at").alias("__first"))
+    return (
+        latest.join(first_seen, "key", "left")
+        .withColumn("created_at", F.coalesce(F.col("__first"), F.col("created_at")))
+        .drop("__first")
+    )
+
+
+@pytest.mark.parametrize("seed", range(8))
+def test_merge_documents_equals_two_aggregation_spec(spark, seed):
+    """One aggregation per upsert: the one-pass merge equals the
+    two-aggregation formula on frames with duplicate keys, tied
+    updated_at, tied content_hash and null created_at."""
+    import random
+
+    from ftm_datalake_spark.operators.documents import merge_documents
+    from ftm_datalake_spark.schemas import DOCUMENTS_SCHEMA
+
+    rng = random.Random(seed)
+
+    def rows(n):
+        return [
+            (
+                rng.choice(KEYS + ["d", "e"]),
+                rng.choice(HASHES[:2]),  # few hashes: ties
+                rng.choice([None, 1, 2, 3]),
+                rng.choice(["text/plain", None]),
+                rng.choice([None, *TIMES]),  # null created_at
+                rng.choice(TIMES[:2]),  # few timestamps: ties
+                "ds",
+            )
+            for _ in range(n)
+        ]
+
+    current = spark.createDataFrame(rows(rng.randint(0, 12)), DOCUMENTS_SCHEMA)
+    added = spark.createDataFrame(rows(rng.randint(1, 12)), DOCUMENTS_SCHEMA)
+    added = added.repartition(rng.randint(1, 4))
+    deleted = (
+        spark.createDataFrame([(k,) for k in rng.sample(KEYS, 1)], "key string")
+        if seed % 2
+        else None
+    )
+    got = merge_documents(current, added, deleted)
+    want = _two_aggregation_merge(current, added, deleted)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
