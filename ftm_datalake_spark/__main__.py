@@ -467,41 +467,59 @@ def _dispatch(spark, args) -> int:
     )
 
     if args.cmd == "crawl":
-        if args.source.startswith("s3://"):
-            # S3 object store: routed by URI scheme like the HTTP
-            # backend; creds via the boto3 default chain or
-            # FTM_DATALAKE_S3_{KEY,SECRET} (moto/MinIO endpoints via
-            # --s3-endpoint)
-            import os as _os
+        if args.source.startswith(("s3://", "http://", "https://")):
+            # Key-addressed store, routed by URI scheme like the
+            # reference's fsspec stores. The store is listed ONCE: the
+            # listing feeds both the crawl and the --archive pass.
+            if args.source.startswith("s3://"):
+                # creds via the boto3 default chain or
+                # FTM_DATALAKE_S3_{KEY,SECRET} (moto/MinIO endpoints via
+                # --s3-endpoint)
+                import os as _os
 
-            from ftm_datalake_spark.sources.s3_store import crawl_s3
+                from ftm_datalake_spark.sources import s3_store
 
-            bucket, _, s3_prefix = args.source[len("s3://"):].partition("/")
-            s3_conn = {
-                "endpoint_url": args.s3_endpoint,
-                "access_key": _os.environ.get("FTM_DATALAKE_S3_KEY"),
-                "secret_key": _os.environ.get("FTM_DATALAKE_S3_SECRET"),
-            }
-            inv_keys = None
-            if getattr(args, "inventory", None):
-                from ftm_datalake_spark.sources.s3_store import (
-                    read_s3_inventory,
+                bucket, _, s3_prefix = args.source[len("s3://"):].partition("/")
+                s3_conn = {
+                    "endpoint_url": args.s3_endpoint,
+                    "access_key": _os.environ.get("FTM_DATALAKE_S3_KEY"),
+                    "secret_key": _os.environ.get("FTM_DATALAKE_S3_SECRET"),
+                }
+                if getattr(args, "inventory", None):
+                    listing = s3_store.read_s3_inventory(
+                        spark, args.inventory, prefix=s3_prefix
+                    )
+                else:
+                    listing = s3_store.list_s3_objects(bucket, s3_prefix, s3_conn)
+                counters = s3_store.crawl_s3(
+                    spark, bucket, args.dataset, args.lake, prefix=s3_prefix,
+                    include=args.include, exclude=args.exclude, conn=s3_conn,
+                    keys=listing,
                 )
 
-                inv_keys = read_s3_inventory(
-                    spark, args.inventory, prefix=s3_prefix
+                def fetch(keys):
+                    return s3_store.scan_s3_store(
+                        spark, bucket, keys=keys, prefix=s3_prefix,
+                        conn=s3_conn, on_missing="skip",
+                    )
+            else:
+                from ftm_datalake_spark.sources import http_store
+
+                listing = http_store.list_http_autoindex(args.source)
+                counters = http_store.crawl_http(
+                    spark, args.source, args.dataset, args.lake,
+                    include=args.include, exclude=args.exclude, keys=listing,
                 )
-            counters = crawl_s3(
-                spark, bucket, args.dataset, args.lake, prefix=s3_prefix,
-                include=args.include, exclude=args.exclude, conn=s3_conn,
-                keys=inv_keys,
-            )
+
+                def fetch(keys):
+                    return http_store.scan_http_store(
+                        spark, args.source, keys=keys, on_missing="skip"
+                    )
+
             if args.archive:
-                # pending set computed RELATIONALLY (no driver key
-                # collect, same contract as the crawl itself): table
-                # keys still live in the store, minus content hashes
-                # already in the sharded archive (metadata listing),
-                # deduped to one GET per missing blob.
+                # the crawl applied --include/--exclude and merged the
+                # table; archive what it holds that is still in the
+                # store and not yet in the archive
                 from pyspark.sql import functions as F
 
                 from ftm_datalake_spark.functions.checksum import (
@@ -509,147 +527,37 @@ def _dispatch(spark, args) -> int:
                 )
                 from ftm_datalake_spark.sources.archive import (
                     archive_blob_bytes,
-                )
-                from ftm_datalake_spark.sources.s3_store import (
-                    _keys_df,
-                    list_s3_objects,
-                    scan_s3_store,
+                    pending_archive_keys,
                 )
 
-                docs = read_documents(spark, args.lake, args.dataset)
-                arch = _os.path.join(args.lake, args.dataset, "archive")
-                live = (
-                    inv_keys
-                    if inv_keys is not None
-                    else _keys_df(
-                        spark, list_s3_objects(bucket, s3_prefix, s3_conn)
-                    )
-                )
-                try:
-                    archived = (
-                        spark.read.format("binaryFile")
-                        .option("recursiveFileLookup", "true")
-                        .load(arch)
-                        .select(
-                            F.element_at(
-                                F.split(F.col("path"), "/"), -1
-                            ).alias("content_hash")
-                        )
-                    )
-                except Exception:  # no archive dir yet
-                    archived = spark.createDataFrame(
-                        [], "content_hash string"
-                    )
-                pending = (
-                    docs.select("key", "content_hash")
-                    .join(live, "key", "left_semi")
-                    .join(archived, "content_hash", "left_anti")
-                    .groupBy("content_hash")
-                    .agg(F.min("key").alias("key"))
-                    .select("key")
-                )
-                fetched = scan_s3_store(
-                    spark,
-                    bucket,
-                    keys=pending,
-                    prefix=s3_prefix,
-                    conn=s3_conn,
-                    on_missing="skip",
-                ).select(
-                    "content",
-                    content_checksum(F.col("content")).alias(
-                        "content_hash"
-                    ),
+                pending = pending_archive_keys(
+                    spark, args.lake, args.dataset, listing
                 )
                 archive_blob_bytes(
-                    fetched, args.lake, args.dataset,
-                    s3_conn=_lake_s3_conn(args),
+                    fetch(pending).select(
+                        "content",
+                        content_checksum(F.col("content")).alias("content_hash"),
+                    ),
+                    args.lake, args.dataset, s3_conn=_lake_s3_conn(args),
                 )
-            print(json.dumps(counters))
-            return 0
-        if args.source.startswith(("http://", "https://")):
-            # Remote HTTP store: same verb, same counters — the backend
-            # is routed by URI scheme like the reference's fsspec stores
-            from ftm_datalake_spark.sources.http_store import crawl_http
-
-            # The crawl's own autoindex walk is captured so a follow-up
-            # --archive pass reuses it (one HTTP GET per directory,
-            # once — not twice per command invocation).
-            http_listing: list[str] = []
-            counters = crawl_http(
-                spark, args.source, args.dataset, args.lake,
-                include=args.include, exclude=args.exclude,
-                listing_out=http_listing,
-            )
         else:
             counters = crawl(
                 spark, args.source, args.dataset, args.lake,
                 include=args.include, exclude=args.exclude,
             )
-        if args.archive:
-            import os
+            if args.archive:
+                from pyspark.sql import functions as F
 
-            from pyspark.sql import functions as F
+                from ftm_datalake_spark.sources.archive import archive_blobs
 
-            from ftm_datalake_spark.sources.archive import (
-                archive_blob_bytes,
-                archive_blobs,
-            )
-
-            # Archive pass driven by the MERGED TABLE, not a fresh
-            # content scan: the crawl already applied --include/--exclude
-            # and computed every hash, so excluded files are never
-            # archived and nothing is re-read or re-hashed here —
-            # existing shards are skipped, so only genuinely new blobs
-            # move. Restricted to keys present in the CURRENT source
-            # listing: crawl never deletes table rows, so rows from
-            # earlier crawls whose source file has since been removed
-            # would otherwise produce dangling source paths (local) or
-            # 404s (HTTP).
-            docs = read_documents(spark, args.lake, args.dataset)
-            if args.source.startswith(("http://", "https://")):
-                from ftm_datalake_spark.functions.checksum import (
-                    content_checksum,
-                )
-                from ftm_datalake_spark.sources.http_store import (
-                    scan_http_store,
-                )
-
-                arch = os.path.join(args.lake, args.dataset, "archive")
-                # Reuse the crawl step's walk instead of re-listing.
-                live = set(http_listing)
-                # skip-archived on metadata: only keys whose shard is
-                # absent are fetched again (per-dataset metadata scale);
-                # stale table rows (key gone from the source) are
-                # skipped rather than 404-ing the job
-                pending = [
-                    r["key"]
-                    for r in docs.select("key", "content_hash").collect()
-                    if r["key"] in live
-                    and not os.path.exists(
-                        os.path.join(
-                            arch,
-                            r["content_hash"][0:2],
-                            r["content_hash"][2:4],
-                            r["content_hash"][4:6],
-                            r["content_hash"],
-                        )
-                    )
-                ]
-                if pending:
-                    fetched = scan_http_store(
-                        spark, args.source, pending
-                    ).select(
-                        "content",
-                        content_checksum(F.col("content")).alias(
-                            "content_hash"
-                        ),
-                    )
-                    archive_blob_bytes(
-                        fetched, args.lake, args.dataset,
-                        s3_conn=_lake_s3_conn(args),
-                    )
-            else:
+                # Archive pass driven by the MERGED TABLE, not a fresh
+                # content scan: the crawl already applied
+                # --include/--exclude and computed every hash, so excluded
+                # files are never archived and nothing is re-read or
+                # re-hashed here; existing shards are skipped, and rows
+                # whose source file has since been removed are skipped
+                # as stale.
+                docs = read_documents(spark, args.lake, args.dataset)
                 src_prefix = args.source.rstrip("/") + "/"
                 files = docs.select(
                     F.concat(F.lit(src_prefix), F.col("key")).alias("path"),

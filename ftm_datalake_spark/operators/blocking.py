@@ -130,43 +130,6 @@ def candidate_pairs(
     )
 
 
-def score_token_jaccard(
-    candidates: DataFrame, postings: DataFrame
-) -> DataFrame:
-    """Distinct-token Jaccard per candidate pair via postings joins.
-
-    Work is proportional to candidate-pair postings, not corpus²: the
-    blocking stage already bounded the candidate set.
-    """
-    sizes = postings.groupBy("doc_id").agg(F.count("*").alias("n_tok"))
-    ta = postings.select(F.col("doc_id").alias("doc_a"), "token")
-    tb = postings.select(F.col("doc_id").alias("doc_b"), "token")
-    inter = (
-        candidates.join(ta, "doc_a")
-        .join(tb, ["doc_b", "token"])
-        .groupBy("doc_a", "doc_b", "source_a", "source_b")
-        .agg(F.count("*").alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_tok").alias("__na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_tok").alias("__nb"))
-    return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "source_a",
-            "source_b",
-            "n_inter",
-            (F.col("__na") + F.col("__nb") - F.col("n_inter")).alias("n_union"),
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("__na") + F.col("__nb") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
-
-
 def entity_match(
     df: DataFrame,
     text_col: str = "text",

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import fnmatch
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +35,27 @@ def _glob_to_regex(glob: str) -> str:
     # end-anchors; anchor the start too so 'tmp/*' does not also match
     # 'backup/tmp/...' (the reference's fnmatch is start-anchored).
     return r"\A" + fnmatch.translate(glob)
+
+
+def _glob_keep(keys: list[str], include: str | None, exclude: str | None) -> list[str]:
+    """The include/exclude globs over a key list: the list form of
+    :func:`_glob_where`, with the same anchored patterns."""
+    inc = re.compile(_glob_to_regex(include)) if include else None
+    exc = re.compile(_glob_to_regex(exclude)) if exclude else None
+    return [
+        k
+        for k in keys
+        if (inc is None or inc.match(k)) and (exc is None or not exc.match(k))
+    ]
+
+
+def _glob_where(df: DataFrame, include: str | None, exclude: str | None) -> DataFrame:
+    """The include/exclude globs over a ``key`` column, in-plan."""
+    if include:
+        df = df.where(F.col("key").rlike(_glob_to_regex(include)))
+    if exclude:
+        df = df.where(~F.col("key").rlike(_glob_to_regex(exclude)))
+    return df
 
 
 def _document_rows(files: DataFrame, source_uri: str, dataset: str) -> DataFrame:
@@ -80,11 +102,7 @@ def crawl_scan(
     empties = _empty_files(spark, source_uri)
     if empties is not None:
         df = df.unionByName(_zero_length_documents(empties, dataset))
-    if include:
-        df = df.where(F.col("key").rlike(_glob_to_regex(include)))
-    if exclude:
-        df = df.where(~F.col("key").rlike(_glob_to_regex(exclude)))
-    return df
+    return _glob_where(df, include, exclude)
 
 
 def crawl_listing(
@@ -114,11 +132,7 @@ def crawl_listing(
     empties = _empty_files(spark, source_uri)
     if empties is not None:
         df = df.unionByName(empties.select("path", "key", "size", "updated_at"))
-    if include:
-        df = df.where(F.col("key").rlike(_glob_to_regex(include)))
-    if exclude:
-        df = df.where(~F.col("key").rlike(_glob_to_regex(exclude)))
-    return df
+    return _glob_where(df, include, exclude)
 
 
 EMPTY_SHA1 = "da39a3ee5e6b4b0d3255bfef95601890afd80709"
@@ -263,8 +277,8 @@ def crawl(
         n_changed = changed.count()
 
         # Nothing changed: the merge would rewrite the partition with
-        # the rows it already holds, so skip it (as crawl_s3/crawl_http
-        # do). Deleted files are not removed by a crawl either way.
+        # the rows it already holds, so skip it (as crawl_keys does).
+        # Deleted files are not removed by a crawl either way.
         if n_changed:
             # zero-length files were listed without a read (binaryFile
             # drops them from content scans); only size > 0 is scanned
@@ -314,6 +328,77 @@ def crawl(
         "added_or_updated": n_changed,
         "not_found": 0,
     }
+
+
+def crawl_keys(
+    spark: SparkSession,
+    keys: "list[str] | DataFrame",
+    fetch,
+    source_uri: str,
+    dataset: str,
+    lake_dir: str,
+    include: str | None = None,
+    exclude: str | None = None,
+) -> dict:
+    """Crawl of a key-addressed store (S3, HTTP): key listing → glob
+    filters → skip-existing anti-join on ``key`` → fetch only the new
+    keys → merge → write. A store listing carries no size/mtime to
+    compare, so the skip is the reference's key-existence check
+    (ftm_datalake/crawl.py:67-71): a re-crawl of an unchanged store
+    fetches nothing and writes nothing.
+
+    ``keys`` is a list (a store walk) or a ``key`` DataFrame (an
+    inventory manifest); ``fetch(new_keys)`` is the store's
+    binaryFile-shaped scan of a ``key`` DataFrame with missing keys
+    skipped. No key set is collected to the driver. Returns the crawl
+    counters: files_total (listed after the globs), added_or_updated
+    (rows landed), not_found (listed but gone by fetch time — the
+    reference's memorious counter, sync/memorious.py:29-33)."""
+    from ftm_datalake_spark.sources.http_store import _keys_df
+
+    if isinstance(keys, DataFrame):
+        # pin: the listing feeds the total count and the anti-join
+        listing = _glob_where(keys, include, exclude)
+        listing = listing.localCheckpoint(eager=True)
+        n_total = listing.count()
+    else:  # a store walk is already on the driver: filter and count it there
+        keys = _glob_keep(keys, include, exclude)
+        listing, n_total = _keys_df(spark, keys), len(keys)
+    current = read_documents(spark, lake_dir, dataset)
+    n_before = current.count()
+    new_keys = listing.join(
+        current.select("key"), "key", "left_anti"
+    ).localCheckpoint(eager=True)
+    n_new = new_keys.count()
+    n_after = n_before
+    if n_new:
+        rows = _document_rows(fetch(new_keys), source_uri, dataset)
+        write_documents(merge_documents(current, rows), lake_dir)
+        n_after = read_documents(spark, lake_dir, dataset).count()
+    return {
+        "files_total": n_total,
+        "added_or_updated": n_after - n_before,
+        "not_found": n_new - (n_after - n_before),
+    }
+
+
+def crawl_scan_keys(
+    keys: "list[str] | DataFrame",
+    fetch,
+    source_uri: str,
+    dataset: str,
+    include: str | None = None,
+    exclude: str | None = None,
+) -> DataFrame:
+    """crawl_scan of a key-addressed store: the globs prune the key
+    source (a list stays a list, a DataFrame is pruned in-plan) before
+    ``fetch`` reads any blob — the reference skips before fetching,
+    ftm_datalake/crawl.py:58-71."""
+    if isinstance(keys, DataFrame):
+        keys = _glob_where(keys, include, exclude)
+    else:
+        keys = _glob_keep(keys, include, exclude)
+    return _document_rows(fetch(keys), source_uri, dataset)
 
 
 def _index_document(

@@ -31,7 +31,6 @@ import os
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 def forget_keys(
@@ -66,24 +65,13 @@ def orphan_blobs(
 ) -> DataFrame:
     """Archive blob files whose content hash no documents row references
     — the GC plan, as a DataFrame of (path, content_hash). Pure
-    metadata: the binaryFile listing never projects content bytes, and
-    the referenced-hash side is a distinct projection of the table."""
+    metadata: the archive listing (:func:`sources.archive.archived_blobs`)
+    never reads content bytes, and the referenced-hash side is a
+    distinct projection of the table. A failed listing raises."""
     from ftm_datalake_spark.pipelines.ingest import read_documents
+    from ftm_datalake_spark.sources.archive import archived_blobs
 
-    archive_dir = os.path.join(lake_dir, dataset, "archive")
-    try:
-        listing = (
-            spark.read.format("binaryFile")
-            .option("recursiveFileLookup", "true")
-            .load(archive_dir)
-            .select("path")
-        )
-    except Exception:  # no archive dir yet → nothing to collect
-        return spark.createDataFrame([], "path string, content_hash string")
-    blobs = listing.select(
-        "path",
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("content_hash"),
-    )
+    blobs = archived_blobs(spark, lake_dir, dataset)
     referenced = (
         read_documents(spark, lake_dir, dataset)
         .select("content_hash")

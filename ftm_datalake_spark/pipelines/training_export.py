@@ -237,12 +237,6 @@ _hadoop_fs = fsutil.hadoop_fs
 _dir_has_data = fsutil.dir_has_data
 
 
-def _count_chunks(spark: SparkSession, chunk_dir: str) -> int:
-    """Total chunk count across shards from a written chunk map; 0 for
-    an empty map (no part files). Real read failures propagate."""
-    return sum(_chunks_per_shard(spark, chunk_dir).values())
-
-
 def _chunks_per_shard(
     spark: SparkSession, chunk_dir: str, shards: list[int] | None = None
 ) -> dict:

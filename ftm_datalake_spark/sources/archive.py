@@ -34,22 +34,31 @@ scheme:
   staged writes (``write_bytes_atomic``): functional everywhere,
   driver-throughput-bound, the documented last-resort tier.
 
+The tiers are written once (``_write_blobs``), parameterised by a
+per-row source that opens the blob: ``archive_blobs`` opens a source
+path (a missing one is a stale row, skipped) and ``archive_blob_bytes``
+wraps bytes a store scan already fetched. ``archived_blobs`` is the one
+archive listing (GC and the ``crawl --archive`` work list share it), and
+it raises rather than read an unreachable archive as empty.
+
 S7 config: YAML `config.yml` per dataset, a driver-side small read
 (ftm_datalake/archive/dataset.py:75-83).
 """
 
 from __future__ import annotations
 
+import io
 import os
 import shutil
 from collections.abc import Iterator
 from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ftm_datalake_spark.fsutil import strip_file_scheme as _strip_file_scheme
 from ftm_datalake_spark.fsutil_py import pyarrow_fs_for
-from ftm_datalake_spark.functions.checksum import shard_path  # noqa: F401  (expr twin)
+from ftm_datalake_spark.functions.checksum import shard_path  # noqa: F401  (Column form of _shard)
 
 
 def _shard(content_hash: str) -> str:
@@ -112,32 +121,30 @@ def _s3_put_verified(client, bucket: str, key: str, data: bytes) -> None:
         raise IOError(f"s3 upload verify failed for {key}: {etag} != {want}")
 
 
-def archive_blobs(
-    files: DataFrame,
+def _write_blobs(
+    rows: DataFrame,
+    open_source,
     archive_root: str,
     dataset: str,
-    path_col: str = "path",
-    hash_col: str = "content_hash",
-    s3_conn: dict | None = None,
-    task_fs_factory=None,
+    hash_col: str,
+    s3_conn: dict | None,
+    task_fs_factory,
 ) -> None:
-    """S10: distributed copy of blobs into the sharded archive layout.
-
-    `files` carries (local source path, content hash); each partition
-    copies its own blobs. Idempotent: existing target shards are kept
-    (content-addressing makes overwrites meaningless). Missing source
-    files are SKIPPED, not fatal: the archive pass is driven by the
-    merged documents table, which retains rows from earlier crawls whose
-    source file may since have been removed — one stale row must not
-    crash the whole job (same tolerance as gc_blobs' delete).
-
-    ``archive_root`` may be a local path (executor-side temp+rename
-    copy), an ``s3://`` URI (task-side boto3 HEAD/PUT/verify), or any
-    other scheme — distributed through a pickled pure-Python filesystem
-    when one resolves (``task_fs_factory(archive_root) -> (fs, path)``,
-    defaulting to ``pyarrow.fs.FileSystem.from_uri``), else the
-    driver-side fsutil fallback; see the module docstring."""
+    """The tiered blob writer behind :func:`archive_blobs` and
+    :func:`archive_blob_bytes`. ``rows`` carries a source column first
+    and ``hash_col``; ``open_source(source)`` opens a row's blob as a
+    binary file object, or returns None for a stale row (the blob is
+    gone), which is skipped. Every tier skips a shard already present
+    (content-addressing makes overwrites meaningless) and never leaves
+    a truncated blob at a content-addressed name."""
     scheme = urlparse(archive_root).scheme
+
+    def read(row) -> bytes | None:
+        src = open_source(row[0])
+        if src is None:
+            return None
+        with src:
+            return src.read()
 
     if scheme == "s3":
         from ftm_datalake_spark.sources.s3_store import _client, _require_boto3
@@ -149,23 +156,20 @@ def archive_blobs(
         base_key = "/".join(p for p in (root_prefix, dataset, "archive") if p)
         conn = dict(s3_conn or {})
 
-        def put_partition(rows: Iterator) -> None:
+        def put_partition(part: Iterator) -> None:
             client = _client(conn)  # one client per task, TLS amortized
-            for row in rows:
+            for row in part:
                 key = f"{base_key}/{_shard(row[hash_col])}"
                 try:
                     client.head_object(Bucket=bucket, Key=key)
                     continue  # idempotent: already archived
                 except Exception:
                     pass
-                try:
-                    with open(_strip_file_scheme(row[path_col]), "rb") as fh:
-                        data = fh.read()
-                except FileNotFoundError:
-                    continue  # stale table row: source removed since crawl
-                _s3_put_verified(client, bucket, key, data)
+                data = read(row)
+                if data is not None:
+                    _s3_put_verified(client, bucket, key, data)
 
-        files.select(path_col, hash_col).foreachPartition(put_partition)
+        rows.foreachPartition(put_partition)
         return
 
     if scheme not in ("", "file"):
@@ -181,21 +185,18 @@ def archive_blobs(
             fs, root_path = resolved
             base = f"{str(root_path).rstrip('/')}/{dataset}/archive"
 
-            def put_partition_fs(rows: Iterator) -> None:
+            def put_partition_fs(part: Iterator) -> None:
                 from pyarrow.fs import FileType
 
-                for row in rows:
+                for row in part:
                     target = f"{base}/{_shard(row[hash_col])}"
                     if fs.get_file_info(target).type != FileType.NotFound:
                         continue  # idempotent: already archived
-                    try:
-                        with open(_strip_file_scheme(row[path_col]), "rb") as fh:
-                            data = fh.read()
-                    except FileNotFoundError:
-                        continue  # stale table row
-                    _task_fs_put(fs, target, data)
+                    data = read(row)
+                    if data is not None:
+                        _task_fs_put(fs, target, data)
 
-            files.select(path_col, hash_col).foreachPartition(put_partition_fs)
+            rows.foreachPartition(put_partition_fs)
             return
 
         # JVM-only scheme (viewfs, …): driver-side FS-client copy per
@@ -204,43 +205,89 @@ def archive_blobs(
         # blob must never sit at a content-addressed name, ADVICE r11 #1)
         from ftm_datalake_spark import fsutil
 
-        spark = files.sparkSession
+        spark = rows.sparkSession
         base = f"{archive_root.rstrip('/')}/{dataset}/archive"
-        for row in files.select(path_col, hash_col).toLocalIterator():
+        for row in rows.toLocalIterator():
             target = f"{base}/{_shard(row[hash_col])}"
             if fsutil.exists(spark, target):
                 continue
-            src = _strip_file_scheme(row[path_col])
-            if not os.path.exists(src):
-                continue  # stale table row
-            with open(src, "rb") as fh:
-                fsutil.write_bytes_atomic(spark, target, fh.read())
+            data = read(row)
+            if data is not None:
+                fsutil.write_bytes_atomic(spark, target, data)
         return
 
     base = os.path.join(_strip_file_scheme(archive_root), dataset, "archive")
 
-    def copy_partition(rows: Iterator) -> None:
+    def copy_partition(part: Iterator) -> None:
         import uuid
 
-        for row in rows:
-            src = _strip_file_scheme(row[path_col])
+        for row in part:
             target = os.path.join(base, _shard(row[hash_col]))
             if os.path.exists(target):
                 continue
+            src = open_source(row[0])
+            if src is None:
+                continue
             os.makedirs(os.path.dirname(target), exist_ok=True)
-            # copy via temp + atomic rename: a task killed mid-copy must
-            # not leave a truncated blob that future runs skip as done
+            # stream via temp + atomic rename: a task killed mid-copy
+            # must not leave a truncated blob that future runs skip
             tmp = f"{target}.__tmp__{uuid.uuid4().hex}"
             try:
-                shutil.copyfile(src, tmp)
+                with src, open(tmp, "wb") as out:
+                    shutil.copyfileobj(src, out)
                 os.rename(tmp, target)
-            except FileNotFoundError:
-                pass  # stale table row: source removed since its crawl
             finally:
                 if os.path.exists(tmp):
                     os.remove(tmp)
 
-    files.select(path_col, hash_col).foreachPartition(copy_partition)
+    rows.foreachPartition(copy_partition)
+
+
+def _open_path(path: str):
+    try:
+        return open(_strip_file_scheme(path), "rb")
+    except FileNotFoundError:
+        return None  # stale table row: source removed since its crawl
+
+
+def _open_content(content) -> io.BytesIO:
+    return io.BytesIO(bytes(content))
+
+
+def archive_blobs(
+    files: DataFrame,
+    archive_root: str,
+    dataset: str,
+    path_col: str = "path",
+    hash_col: str = "content_hash",
+    s3_conn: dict | None = None,
+    task_fs_factory=None,
+) -> None:
+    """S10: distributed copy of blobs into the sharded archive layout.
+
+    `files` carries (local source path, content hash); each partition
+    copies its own blobs. Idempotent: existing target shards are kept.
+    Missing source files are SKIPPED, not fatal: the archive pass is
+    driven by the merged documents table, which retains rows from
+    earlier crawls whose source file may since have been removed — one
+    stale row must not crash the whole job (same tolerance as gc_blobs'
+    delete).
+
+    ``archive_root`` may be a local path (executor-side temp+rename
+    copy), an ``s3://`` URI (task-side boto3 HEAD/PUT/verify), or any
+    other scheme — distributed through a pickled pure-Python filesystem
+    when one resolves (``task_fs_factory(archive_root) -> (fs, path)``,
+    defaulting to ``pyarrow.fs.FileSystem.from_uri``), else the
+    driver-side fsutil fallback; see the module docstring."""
+    _write_blobs(
+        files.select(path_col, hash_col),
+        _open_path,
+        archive_root,
+        dataset,
+        hash_col,
+        s3_conn,
+        task_fs_factory,
+    )
 
 
 def archive_blob_bytes(
@@ -253,96 +300,84 @@ def archive_blob_bytes(
     task_fs_factory=None,
 ) -> None:
     """S10 for remote stores: write blob BYTES (already fetched
-    task-side, e.g. by the HTTP backend) into the sharded layout — no
-    local source path exists to copy from. Same idempotence and
-    atomicity contract as archive_blobs; bytes flow executor→store on
-    local, s3, and Python-resolvable roots, and through the driver's FS
-    client (staged atomic writes) only on JVM-only schemes — the same
-    tiering as archive_blobs."""
-    scheme = urlparse(archive_root).scheme
-
-    if scheme == "s3":
-        from ftm_datalake_spark.sources.s3_store import _client, _require_boto3
-
-        _require_boto3()
-        parsed = urlparse(archive_root)
-        bucket = parsed.netloc
-        root_prefix = parsed.path.strip("/")
-        base_key = "/".join(p for p in (root_prefix, dataset, "archive") if p)
-        conn = dict(s3_conn or {})
-
-        def put_partition(rows: Iterator) -> None:
-            client = _client(conn)
-            for row in rows:
-                key = f"{base_key}/{_shard(row[hash_col])}"
-                try:
-                    client.head_object(Bucket=bucket, Key=key)
-                    continue
-                except Exception:
-                    pass
-                _s3_put_verified(client, bucket, key, bytes(row[content_col]))
-
-        files.select(content_col, hash_col).foreachPartition(put_partition)
-        return
-
-    if scheme not in ("", "file"):
-        resolved = (
-            task_fs_factory(archive_root)
-            if task_fs_factory is not None
-            else pyarrow_fs_for(archive_root)
-        )
-        if resolved is not None:
-            fs, root_path = resolved
-            base = f"{str(root_path).rstrip('/')}/{dataset}/archive"
-
-            def put_partition_fs(rows: Iterator) -> None:
-                from pyarrow.fs import FileType
-
-                for row in rows:
-                    target = f"{base}/{_shard(row[hash_col])}"
-                    if fs.get_file_info(target).type != FileType.NotFound:
-                        continue
-                    _task_fs_put(fs, target, bytes(row[content_col]))
-
-            files.select(content_col, hash_col).foreachPartition(
-                put_partition_fs
-            )
-            return
-
-        from ftm_datalake_spark import fsutil
-
-        spark = files.sparkSession
-        base = f"{archive_root.rstrip('/')}/{dataset}/archive"
-        for row in files.select(content_col, hash_col).toLocalIterator():
-            target = f"{base}/{_shard(row[hash_col])}"
-            if not fsutil.exists(spark, target):
-                fsutil.write_bytes_atomic(
-                    spark, target, bytes(row[content_col])
-                )
-        return
-
-    base = os.path.join(
-        _strip_file_scheme(archive_root), dataset, "archive"
+    task-side, e.g. by the HTTP or S3 backend) into the sharded layout —
+    no local source path exists to copy from. Same tiers, idempotence
+    and atomicity contract as :func:`archive_blobs`."""
+    _write_blobs(
+        files.select(content_col, hash_col),
+        _open_content,
+        archive_root,
+        dataset,
+        hash_col,
+        s3_conn,
+        task_fs_factory,
     )
 
-    def write_partition(rows: Iterator) -> None:
-        import uuid
 
-        for row in rows:
-            target = os.path.join(base, _shard(row[hash_col]))
-            if os.path.exists(target):
-                continue
-            os.makedirs(os.path.dirname(target), exist_ok=True)
-            tmp = f"{target}.__tmp__{uuid.uuid4().hex}"
-            try:
-                with open(tmp, "wb") as fh:
-                    fh.write(bytes(row[content_col]))
-                os.rename(tmp, target)
-            finally:
-                if os.path.exists(tmp):
-                    os.remove(tmp)
+def archived_blobs(spark, lake_dir: str, dataset: str) -> DataFrame:
+    """Every blob in the dataset's archive as (path, content_hash) — a
+    binaryFile metadata listing, no content bytes read. A dataset with
+    no archive yet lists as empty; any other failure (unknown scheme,
+    unreachable store) raises: an outage must never read as an empty
+    archive. binaryFile drops zero-length files from a listing, so the
+    one blob that can be empty (``EMPTY_SHA1``) is added back by one
+    existence check on its shard path."""
+    from pyspark.errors import AnalysisException
 
-    files.select(content_col, hash_col).foreachPartition(write_partition)
+    from ftm_datalake_spark import fsutil
+    from ftm_datalake_spark.pipelines.ingest import EMPTY_SHA1
+
+    schema = "path string, content_hash string"
+    archive_dir = os.path.join(lake_dir, dataset, "archive")
+    try:
+        listing = (
+            spark.read.format("binaryFile")
+            .option("recursiveFileLookup", "true")
+            .load(archive_dir)
+            .select("path")
+        )
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return spark.createDataFrame([], schema)
+    blobs = listing.select(
+        "path",
+        F.element_at(F.split(F.col("path"), "/"), -1).alias("content_hash"),
+    )
+    fs, empty, _ = fsutil.hadoop_fs(
+        spark, os.path.join(archive_dir, _shard(EMPTY_SHA1))
+    )
+    if fs.exists(empty):
+        blobs = blobs.unionByName(
+            spark.range(1).select(
+                F.lit(fs.makeQualified(empty).toString()).alias("path"),
+                F.lit(EMPTY_SHA1).alias("content_hash"),
+            )
+        )
+    return blobs
+
+
+def pending_archive_keys(
+    spark, lake_dir: str, dataset: str, live_keys: "list[str] | DataFrame"
+) -> DataFrame:
+    """The ``crawl --archive`` work list of a key-addressed store, as a
+    ``key`` DataFrame: documents rows whose key is still in the store's
+    listing (``live_keys``; a row from an earlier crawl may name a
+    deleted object), minus content hashes already archived, one key per
+    missing hash. Computed relationally: no key set visits the driver."""
+    from ftm_datalake_spark.pipelines.ingest import read_documents
+    from ftm_datalake_spark.sources.http_store import _keys_df
+
+    archived = archived_blobs(spark, lake_dir, dataset).select("content_hash")
+    return (
+        read_documents(spark, lake_dir, dataset)
+        .select("key", "content_hash")
+        .join(_keys_df(spark, live_keys), "key", "left_semi")
+        .join(archived, "content_hash", "left_anti")
+        .groupBy("content_hash")
+        .agg(F.min("key").alias("key"))
+        .select("key")
+    )
 
 
 def open_blob(

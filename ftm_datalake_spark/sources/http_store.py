@@ -11,12 +11,15 @@ two primitives an HTTP store actually offers:
   style), yielding relative keys. Listing is metadata scale by
   definition — bytes never flow here.
 - FETCH: task-side — keys are parallelized and each task GETs its own
-  keys through an Arrow-batched mapInPandas, so blob bytes go straight
-  from the HTTP store to executors, never through the driver. Output is
+  keys, so blob bytes go straight from the store to executors, never
+  through the driver. ``scan_key_store`` is this fetch scan for every
+  key-addressed store (HTTP here, S3 in sources/s3_store.py): a store
+  supplies only its per-task client and its one-key GET. Output is
   binaryFile-shaped (path, modificationTime, length, content), so the
-  whole downstream crawl pipeline (checksum → projection → merge) is
-  IDENTICAL to the local-FS path — proven by the http-vs-local crawl
-  parity test (tests/test_http_store.py).
+  whole downstream crawl pipeline (checksum → projection → merge,
+  ``pipelines.ingest.crawl_keys``) is IDENTICAL to the local-FS path —
+  proven by the http-vs-local crawl parity test
+  (tests/test_http_store.py).
 
 Ranged reads (``read_http_range``) cover the reference's range-server
 contract for streaming single blobs without full downloads."""
@@ -25,10 +28,9 @@ from __future__ import annotations
 
 import datetime as dt
 import posixpath
-import re
 from email.utils import parsedate_to_datetime
 from html.parser import HTMLParser
-from urllib.parse import quote, unquote, urljoin
+from urllib.parse import quote, unquote
 from urllib.request import Request, urlopen
 
 from pyspark.sql import DataFrame, SparkSession
@@ -124,6 +126,85 @@ def read_http_range(
     return body
 
 
+def _keys_df(
+    spark: SparkSession,
+    keys: "list[str] | DataFrame",
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Normalize a key source to a single-column ``key`` DataFrame.
+    Lists (bounded: a store walk) are parallelized; DataFrames (an S3
+    Inventory manifest, possibly 10⁸ rows) pass through without ever
+    touching the driver."""
+    if isinstance(keys, DataFrame):
+        df = keys.select("key")
+        return df.repartition(num_partitions, "key") if num_partitions else df
+    p = num_partitions or spark.sparkContext.defaultParallelism
+    return spark.createDataFrame(
+        [(k,) for k in keys] or [], "key string"
+    ).repartition(min(p, max(1, len(keys))), "key")
+
+
+def scan_key_store(
+    spark: SparkSession,
+    keys: "list[str] | DataFrame",
+    get,
+    open_client=lambda: None,
+    num_partitions: int | None = None,
+    on_missing: str = "error",
+) -> DataFrame:
+    """binaryFile-shaped scan (path, modificationTime, length, content)
+    of any key-addressed store. Keys are parallelized and fetched
+    task-side through one Arrow-batched mapInPandas, so blob bytes go
+    store → executor, never through the driver.
+
+    The store supplies ``open_client()``, called once per task (a boto3
+    client does not pickle, and one per task amortizes its handshake),
+    and ``get(client, key)``, its one-key GET: ``(logical path, mtime,
+    bytes)``, or None when the key is missing. ``on_missing="error"``
+    fails the task on a missing key; ``"skip"`` drops it and the caller
+    counts the shortfall — at scale a listing is always stale (the
+    reference's not_found counter, ftm_datalake/sync/memorious.py:29-33)."""
+    import pandas as pd
+
+    if on_missing not in ("error", "skip"):
+        raise ValueError(
+            f"on_missing must be 'error' or 'skip', got {on_missing!r}"
+        )
+    skip_missing = on_missing == "skip"
+
+    def fetch(batches):
+        client = open_client()  # one per task, reused across batches
+        for pdf in batches:
+            paths, mtimes, contents = [], [], []
+            for key in pdf["key"]:
+                got = get(client, key)
+                if got is None:
+                    if skip_missing:
+                        continue  # deleted between list and fetch
+                    raise FileNotFoundError(f"store key not found: {key!r}")
+                paths.append(got[0])
+                mtimes.append(got[1])
+                contents.append(got[2])
+            # explicit dtypes: an all-skipped batch is EMPTY, and pandas
+            # would otherwise infer float64 for the timestamp column,
+            # which Arrow refuses to cast
+            yield pd.DataFrame(
+                {
+                    "path": pd.Series(paths, dtype="object"),
+                    "modificationTime": pd.to_datetime(
+                        pd.Series(mtimes, dtype="object"), utc=True
+                    ),
+                    "length": pd.Series([len(c) for c in contents], dtype="int64"),
+                    "content": pd.Series(contents, dtype="object"),
+                }
+            )
+
+    return _keys_df(spark, keys, num_partitions).mapInPandas(
+        fetch,
+        "path string, modificationTime timestamp, length long, content binary",
+    )
+
+
 def scan_http_store(
     spark: SparkSession,
     base_url: str,
@@ -132,94 +213,35 @@ def scan_http_store(
     timeout: float = 60.0,
     on_missing: str = "error",
 ) -> DataFrame:
-    """binaryFile-shaped scan of an HTTP store: (path, modificationTime,
-    length, content). ``keys`` defaults to an autoindex walk; a
-    DataFrame of keys stays distributed end to end. Fetches run
-    task-side, Arrow-batched; Last-Modified becomes modificationTime
-    (fetch time when the server sends none). ``on_missing="skip"``
-    drops keys the server answers 404/410 for — listings are stale at
-    scale; the caller counts the shortfall (the reference's not_found
-    counter, ftm_datalake/sync/memorious.py:29-33).
+    """:func:`scan_key_store` over an HTTP store. ``keys`` defaults to an
+    autoindex walk; Last-Modified becomes modificationTime (fetch time
+    when the server sends none); a 404/410 is a missing key.
 
     Path-column convention: ``path`` is the LOGICAL store path —
     ``base + raw_key`` (unquoted) — chosen so ``path_to_key`` strips the
     base prefix and round-trips to the exact table key. The wire URL is
     ``base + quote(key)``; the two differ only by percent-encoding and
     the raw-key form is the single convention recorded everywhere."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
-
-    from pyspark.sql import DataFrame as _DF
-
-    if on_missing not in ("error", "skip"):
-        raise ValueError(
-            f"on_missing must be 'error' or 'skip', got {on_missing!r}"
-        )
-    skip_missing = on_missing == "skip"
     base = base_url.rstrip("/") + "/"
     if keys is None:
         keys = list_http_autoindex(base)
-    if isinstance(keys, _DF):
-        meta = keys.select("key")
-        if num_partitions:
-            meta = meta.repartition(num_partitions, "key")
-    else:
-        p = num_partitions or spark.sparkContext.defaultParallelism
-        meta = spark.createDataFrame(
-            [(k,) for k in keys] or [], "key string"
-        ).repartition(min(p, max(1, len(keys))), "key")
 
-    out_schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-
-    def fetch(batches):
+    def get(_client, key):
         from urllib.error import HTTPError
 
-        for pdf in batches:
-            paths, mtimes, lengths, contents = [], [], [], []
-            for key in pdf["key"]:
-                url = base + quote(key)
-                try:
-                    with urlopen(url, timeout=timeout) as res:
-                        body = res.read()
-                        modified = _http_date(
-                            res.headers.get("Last-Modified")
-                        )
-                except HTTPError as exc:
-                    if skip_missing and exc.code in (404, 410):
-                        continue  # deleted between list and fetch
-                    raise
-                paths.append(base + key)
-                mtimes.append(modified or dt.datetime.now(dt.timezone.utc))
-                lengths.append(len(body))
-                contents.append(body)
-            # explicit dtypes: an all-skipped batch is empty and pandas
-            # would infer float64 for the timestamp column
-            yield pd.DataFrame(
-                {
-                    "path": pd.Series(paths, dtype="object"),
-                    "modificationTime": pd.to_datetime(
-                        pd.Series(mtimes, dtype="object"), utc=True
-                    ),
-                    "length": pd.Series(lengths, dtype="int64"),
-                    "content": pd.Series(contents, dtype="object"),
-                }
-            )
+        try:
+            with urlopen(base + quote(key), timeout=timeout) as res:
+                body = res.read()
+                modified = _http_date(res.headers.get("Last-Modified"))
+        except HTTPError as exc:
+            if exc.code in (404, 410):
+                return None
+            raise
+        return base + key, modified or dt.datetime.now(dt.timezone.utc), body
 
-    return meta.mapInPandas(fetch, out_schema)
+    return scan_key_store(
+        spark, keys, get, num_partitions=num_partitions, on_missing=on_missing
+    )
 
 
 def crawl_http(
@@ -229,61 +251,29 @@ def crawl_http(
     lake_dir: str,
     include: str | None = None,
     exclude: str | None = None,
-    listing_out: list | None = None,
+    keys: "list[str] | DataFrame | None" = None,
 ) -> dict:
-    """Full crawl of an HTTP store into the lake: list → skip-existing
-    anti-join → fetch only the delta → merge → write. The incremental
-    contract is the reference's key-existence skip
-    (ftm_datalake/crawl.py:67-71): an HTTP autoindex carries no
-    size/mtime, so a key already in the documents table is never
-    re-fetched (re-crawl of an unchanged store downloads ZERO bytes —
-    asserted by a fetch-spy test). Returns the crawl counters. Pass
-    ``listing_out`` (a list) to receive the UNFILTERED autoindex
-    listing, so a follow-up pass (e.g. ``crawl --archive``) can reuse
-    it instead of walking the store a second time."""
-    import fnmatch
-
-    from ftm_datalake_spark.operators.documents import merge_documents
-    from ftm_datalake_spark.pipelines.ingest import (
-        read_documents,
-        write_documents,
-    )
+    """Crawl an HTTP store into the lake (:func:`pipelines.ingest.crawl_keys`):
+    an autoindex carries no size/mtime, so a key already in the
+    documents table is never re-fetched — a re-crawl of an unchanged
+    store downloads ZERO bytes (the reference's key-existence skip,
+    ftm_datalake/crawl.py:67-71). ``keys`` replaces the autoindex walk
+    with a caller's listing. Returns the crawl counters."""
+    from ftm_datalake_spark.pipelines.ingest import crawl_keys
 
     base = base_url.rstrip("/") + "/"
-    keys = list_http_autoindex(base)
-    if listing_out is not None:
-        listing_out.extend(keys)
-    if include:
-        keys = [k for k in keys if re.match(r"\A" + fnmatch.translate(include), k)]
-    if exclude:
-        keys = [
-            k for k in keys if not re.match(r"\A" + fnmatch.translate(exclude), k)
-        ]
-    n_total = len(keys)
-    current = read_documents(spark, lake_dir, dataset)
-    n_before = current.count()
-    # skip-existing as a Spark anti-join, kept FULLY distributed: the
-    # new-key set feeds the fetch as a DataFrame, never a driver list
-    # (same contract as the S3 inventory-manifest crawl)
-    listing_df = spark.createDataFrame([(k,) for k in keys] or [], "key string")
-    new_keys = listing_df.join(
-        current.select("key"), "key", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_new = new_keys.count()
-    n_after = n_before
-    if n_new:
-        from ftm_datalake_spark.pipelines.ingest import _document_rows
-
-        files = scan_http_store(spark, base, keys=new_keys, on_missing="skip")
-        rows = _document_rows(files, base, dataset)
-        merged = merge_documents(current, rows)
-        write_documents(merged, lake_dir)
-        n_after = read_documents(spark, lake_dir, dataset).count()
-    return {
-        "files_total": n_total,
-        "added_or_updated": n_after - n_before,
-        "not_found": n_new - (n_after - n_before),
-    }
+    if keys is None:
+        keys = list_http_autoindex(base)
+    return crawl_keys(
+        spark,
+        keys,
+        lambda new: scan_http_store(spark, base, keys=new, on_missing="skip"),
+        base,
+        dataset,
+        lake_dir,
+        include,
+        exclude,
+    )
 
 
 def crawl_scan_http(
@@ -294,23 +284,19 @@ def crawl_scan_http(
     include: str | None = None,
     exclude: str | None = None,
 ) -> DataFrame:
-    """The crawl_scan twin for HTTP sources: same DOCUMENTS_SCHEMA rows,
-    same glob semantics, checksum computed task-side over fetched bytes.
-    Include/exclude prune the KEY LIST before any fetch — excluded blobs
-    are never downloaded (reference skips before fetching,
-    ftm_datalake/crawl.py:58-71)."""
-    import fnmatch
-
-    from ftm_datalake_spark.pipelines.ingest import _document_rows
+    """crawl_scan for HTTP sources (:func:`pipelines.ingest.crawl_scan_keys`):
+    DOCUMENTS_SCHEMA rows, checksums computed task-side over fetched
+    bytes; excluded blobs are never downloaded."""
+    from ftm_datalake_spark.pipelines.ingest import crawl_scan_keys
 
     base = base_url.rstrip("/") + "/"
     if keys is None:
         keys = list_http_autoindex(base)
-    if include:
-        keys = [k for k in keys if re.match(r"\A" + fnmatch.translate(include), k)]
-    if exclude:
-        keys = [
-            k for k in keys if not re.match(r"\A" + fnmatch.translate(exclude), k)
-        ]
-    files = scan_http_store(spark, base, keys)
-    return _document_rows(files, base, dataset)
+    return crawl_scan_keys(
+        keys,
+        lambda pruned: scan_http_store(spark, base, pruned),
+        base,
+        dataset,
+        include,
+        exclude,
+    )

@@ -1,22 +1,23 @@
 """S2 remote-store backend: crawl an S3 object store (SURVEY §2.1).
 
-The reference exercises its crawl against a mocked S3
-(/root/reference/tests/conftest.py:83-171, moto + fsspec patches); its
-storage layer treats S3 as one more fsspec scheme. Spark-side, the
-bundled Hadoop has no hadoop-aws jar in this container, so — exactly
-like the HTTP backend (sources/http_store.py) — the S3 store is built
-from the two primitives the object store actually offers:
+The reference exercises its crawl against a mocked S3 (its
+tests/conftest.py:83-171, moto + fsspec patches); its storage layer
+treats S3 as one more fsspec scheme. Without a hadoop-aws jar Spark
+cannot read ``s3://`` at all, so the S3 store is one more key-addressed
+store, like the HTTP backend (sources/http_store.py). It supplies only
+the two primitives the object store offers:
 
 - LISTING: driver-side, metadata-only — paginated ListObjectsV2 under
   a prefix, yielding relative keys. No blob bytes flow here; a 100 TB
   bucket lists in O(objects/1000) small responses (or is replaced by
   an S3 Inventory manifest passed as ``keys``).
-- FETCH: task-side — keys are parallelized and each task GETs its own
-  objects through an Arrow-batched mapInPandas with ONE boto3 client
-  per task, so blob bytes go store → executor, never through the
-  driver. Output is binaryFile-shaped (path, modificationTime, length,
-  content), so the downstream crawl pipeline (checksum → projection →
-  merge) is IDENTICAL to the local-FS and HTTP paths.
+- ONE-KEY GET through a boto3 client, one client per task.
+
+The shared fetch scan (``http_store.scan_key_store``) turns these into
+a binaryFile-shaped frame, and the shared key-store crawl
+(``pipelines.ingest.crawl_keys``) does the rest, so the downstream
+pipeline (checksum → projection → merge) is the same as for the
+local-FS and HTTP paths.
 
 When a hadoop-aws jar IS on the classpath, plain ``spark.read`` over
 ``s3a://`` remains the right tool for bulk TABLE scans; this backend
@@ -29,9 +30,6 @@ is absent (the engine core never imports it at module load).
 """
 
 from __future__ import annotations
-
-import fnmatch
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -83,24 +81,6 @@ def list_s3_objects(bucket: str, prefix: str = "", conn: dict | None = None) -> 
     return sorted(keys)
 
 
-def _keys_df(
-    spark: SparkSession,
-    keys: "list[str] | DataFrame",
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Normalize a key source to a single-column ``key`` DataFrame.
-    Lists (bounded: a ListObjectsV2 walk) are parallelized; DataFrames
-    (an S3 Inventory manifest — possibly 10⁸ rows) pass through without
-    ever touching the driver."""
-    if isinstance(keys, DataFrame):
-        df = keys.select("key")
-        return df.repartition(num_partitions, "key") if num_partitions else df
-    p = num_partitions or spark.sparkContext.defaultParallelism
-    return spark.createDataFrame(
-        [(k,) for k in keys] or [], "key string"
-    ).repartition(min(p, max(1, len(keys))), "key")
-
-
 def scan_s3_store(
     spark: SparkSession,
     bucket: str,
@@ -110,36 +90,18 @@ def scan_s3_store(
     conn: dict | None = None,
     on_missing: str = "error",
 ) -> DataFrame:
-    """binaryFile-shaped scan of an S3 store: (path, modificationTime,
-    length, content). ``keys`` defaults to a ListObjectsV2 walk; a
+    """:func:`sources.http_store.scan_key_store` over an S3 store, one
+    boto3 client per task. ``keys`` defaults to a ListObjectsV2 walk; a
     DataFrame of keys (S3 Inventory manifest — see
-    :func:`read_s3_inventory`) stays distributed end to end. Fetches run
-    task-side, Arrow-batched, one client per task; the object's
-    LastModified becomes modificationTime.
-
-    ``on_missing``: at 100 TB a listing is always stale — objects get
-    deleted between list and fetch. ``"error"`` (default) fails the
-    task loudly; ``"skip"`` drops the missing key from the output and
-    the caller counts the shortfall — the reference's ``not_found``
-    counter semantics (ftm_datalake/sync/memorious.py:29-33).
+    :func:`read_s3_inventory`) stays distributed end to end. The
+    object's LastModified becomes modificationTime; NoSuchKey is a
+    missing key.
 
     Path-column convention matches the HTTP store: ``path`` is the
     LOGICAL store path ``s3://bucket/[prefix/]key`` so ``path_to_key``
     strips the base prefix and round-trips to the exact table key."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        BinaryType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-        TimestampType,
-    )
+    from ftm_datalake_spark.sources.http_store import scan_key_store
 
-    if on_missing not in ("error", "skip"):
-        raise ValueError(
-            f"on_missing must be 'error' or 'skip', got {on_missing!r}"
-        )
     _require_boto3()
     conn = dict(conn or {})
     prefix = prefix.strip("/")
@@ -147,81 +109,26 @@ def scan_s3_store(
     base = f"s3://{bucket}/{full}"
     if keys is None:
         keys = list_s3_objects(bucket, prefix, conn)
-    meta = _keys_df(spark, keys, num_partitions)
-    skip_missing = on_missing == "skip"
 
-    out_schema = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("modificationTime", TimestampType()),
-            StructField("length", LongType()),
-            StructField("content", BinaryType()),
-        ]
-    )
-
-    def fetch(batches):
+    def get(client, key):
         from botocore.exceptions import ClientError
 
-        client = _client(conn)  # one per task, reused across batches
-        for pdf in batches:
-            paths, mtimes, lengths, contents = [], [], [], []
-            for key in pdf["key"]:
-                try:
-                    res = client.get_object(Bucket=bucket, Key=full + key)
-                except ClientError as exc:
-                    code = exc.response.get("Error", {}).get("Code", "")
-                    if skip_missing and code in ("NoSuchKey", "404"):
-                        continue  # deleted between list and fetch
-                    raise
-                body = res["Body"].read()
-                paths.append(base + key)
-                mtimes.append(res["LastModified"])
-                lengths.append(len(body))
-                contents.append(body)
-            # explicit dtypes: an all-skipped batch is EMPTY, and pandas
-            # would otherwise infer float64 for the timestamp column,
-            # which Arrow refuses to cast
-            yield pd.DataFrame(
-                {
-                    "path": pd.Series(paths, dtype="object"),
-                    "modificationTime": pd.to_datetime(
-                        pd.Series(mtimes, dtype="object"), utc=True
-                    ),
-                    "length": pd.Series(lengths, dtype="int64"),
-                    "content": pd.Series(contents, dtype="object"),
-                }
-            )
+        try:
+            res = client.get_object(Bucket=bucket, Key=full + key)
+        except ClientError as exc:
+            if exc.response.get("Error", {}).get("Code", "") in ("NoSuchKey", "404"):
+                return None
+            raise
+        return base + key, res["LastModified"], res["Body"].read()
 
-    return meta.mapInPandas(fetch, out_schema)
-
-
-def _glob_prune(keys: list[str], include: str | None, exclude: str | None) -> list[str]:
-    if include:
-        keys = [k for k in keys if re.match(r"\A" + fnmatch.translate(include), k)]
-    if exclude:
-        keys = [
-            k for k in keys if not re.match(r"\A" + fnmatch.translate(exclude), k)
-        ]
-    return keys
-
-
-def _glob_prune_df(
-    keys: DataFrame, include: str | None, exclude: str | None
-) -> DataFrame:
-    """The same fnmatch semantics as :func:`_glob_prune`, pushed into
-    the plan (rlike on the anchored translated pattern) so a manifest's
-    keys are pruned distributed, before any GET."""
-    from pyspark.sql import functions as F
-
-    if include:
-        keys = keys.where(
-            F.col("key").rlike(r"\A" + fnmatch.translate(include))
-        )
-    if exclude:
-        keys = keys.where(
-            ~F.col("key").rlike(r"\A" + fnmatch.translate(exclude))
-        )
-    return keys
+    return scan_key_store(
+        spark,
+        keys,
+        get,
+        lambda: _client(conn),
+        num_partitions=num_partitions,
+        on_missing=on_missing,
+    )
 
 
 def read_s3_inventory(
@@ -273,24 +180,24 @@ def crawl_scan_s3(
     exclude: str | None = None,
     conn: dict | None = None,
 ) -> DataFrame:
-    """The crawl_scan twin for S3 sources: same DOCUMENTS_SCHEMA rows,
-    same glob semantics as the local/HTTP paths; include/exclude prune
-    the KEY SOURCE before any fetch — excluded blobs are never
-    downloaded (reference skips before fetching, crawl.py:58-71). A
+    """crawl_scan for S3 sources (:func:`pipelines.ingest.crawl_scan_keys`):
+    DOCUMENTS_SCHEMA rows; excluded blobs are never downloaded, and a
     DataFrame key source (Inventory manifest) is pruned in-plan."""
-    from ftm_datalake_spark.pipelines.ingest import _document_rows
+    from ftm_datalake_spark.pipelines.ingest import crawl_scan_keys
 
     conn = conn or {}
     prefix = prefix.strip("/")
     full = prefix + "/" if prefix else ""
     if keys is None:
         keys = list_s3_objects(bucket, prefix, conn)
-    if isinstance(keys, DataFrame):
-        keys = _glob_prune_df(keys, include, exclude)
-    else:
-        keys = _glob_prune(keys, include, exclude)
-    files = scan_s3_store(spark, bucket, keys, prefix, conn=conn)
-    return _document_rows(files, f"s3://{bucket}/{full}", dataset)
+    return crawl_scan_keys(
+        keys,
+        lambda pruned: scan_s3_store(spark, bucket, pruned, prefix, conn=conn),
+        f"s3://{bucket}/{full}",
+        dataset,
+        include,
+        exclude,
+    )
 
 
 def crawl_s3(
@@ -304,76 +211,43 @@ def crawl_s3(
     conn: dict | None = None,
     keys: "DataFrame | list[str] | None" = None,
 ) -> dict:
-    """Full crawl of an S3 store into the lake: list → skip-existing
-    anti-join → fetch only the delta → merge → write. Identical
-    incremental contract to crawl_http (the reference's key-existence
-    skip, ftm_datalake/crawl.py:67-71): a key already in the documents
-    table is never re-fetched — a re-crawl of an unchanged bucket GETs
-    ZERO objects.
+    """Crawl an S3 store into the lake (:func:`pipelines.ingest.crawl_keys`):
+    a key already in the documents table is never re-fetched — a
+    re-crawl of an unchanged bucket GETs ZERO objects (the reference's
+    key-existence skip, ftm_datalake/crawl.py:67-71).
 
     ``keys`` overrides the driver-side ListObjectsV2 walk with a key
     source of any scale — pass :func:`read_s3_inventory`'s DataFrame to
-    crawl from an S3 Inventory manifest. The new-key path is fully
-    distributed (glob prune → anti-join → task-side GET); no key set is
-    ever collected to the driver, so a 10⁸-object manifest crawls with
-    driver memory O(1) (VERDICT r8 #2). Objects deleted between listing
-    and fetch are skipped and counted (``not_found`` — the reference's
-    memorious counter, sync/memorious.py:29-33).
-
-    Returns the crawl counters: files_total (listed after pruning),
-    added_or_updated (rows landed), not_found (listed but gone by
-    fetch time)."""
-    from ftm_datalake_spark.operators.documents import merge_documents
-    from ftm_datalake_spark.pipelines.ingest import (
-        _document_rows,
-        read_documents,
-        write_documents,
-    )
+    crawl from an S3 Inventory manifest; no key set is ever collected
+    to the driver, so a 10⁸-object manifest crawls with driver memory
+    O(1) (VERDICT r8 #2). Returns the crawl counters."""
+    from ftm_datalake_spark.pipelines.ingest import crawl_keys
 
     conn = dict(conn or {})
     prefix = prefix.strip("/")
     full = prefix + "/" if prefix else ""
     if keys is None:
         keys = list_s3_objects(bucket, prefix, conn)
-    listing = _glob_prune_df(_keys_df(spark, keys), include, exclude)
-    # pin: the listing feeds three jobs (total count, anti-join, fetch);
-    # for the list flavor this is a re-parallelize, for the manifest
-    # flavor one distributed materialization of the key column only
-    listing = listing.localCheckpoint(eager=True)
-    n_total = listing.count()
-    current = read_documents(spark, lake_dir, dataset)
-    n_before = current.count()
-    new_keys = listing.join(
-        current.select("key"), "key", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_new = new_keys.count()
-    n_after = n_before
-    if n_new:
-        files = scan_s3_store(
-            spark,
-            bucket,
-            keys=new_keys,
-            prefix=prefix,
-            conn=conn,
-            on_missing="skip",
-        )
-        rows = _document_rows(files, f"s3://{bucket}/{full}", dataset)
-        merged = merge_documents(current, rows)
-        write_documents(merged, lake_dir)
-        n_after = read_documents(spark, lake_dir, dataset).count()
-    return {
-        "files_total": n_total,
-        "added_or_updated": n_after - n_before,
-        "not_found": n_new - (n_after - n_before),
-    }
+    return crawl_keys(
+        spark,
+        keys,
+        lambda new: scan_s3_store(
+            spark, bucket, keys=new, prefix=prefix, conn=conn, on_missing="skip"
+        ),
+        f"s3://{bucket}/{full}",
+        dataset,
+        lake_dir,
+        include,
+        exclude,
+    )
 
 
 def read_s3_range(
     bucket: str, key: str, start: int, length: int, conn: dict | None = None
 ) -> bytes:
     """Ranged object read (bytes [start, start+length)) — S3's native
-    Range GET; the twin of http_store.read_http_range for streaming a
-    slice of a large blob without fetching the object."""
+    Range GET; like http_store.read_http_range, it streams a slice of
+    a large blob without fetching the object."""
     _require_boto3()
     client = _client(conn or {})
     res = client.get_object(

@@ -18,7 +18,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ftm_datalake_spark.schemas import (
     DOCUMENTS_SCHEMA,
-    FILE_INFO_SCHEMA,
     TEST_TABLE_SCHEMAS,
     TEST_TABLES,
 )
@@ -64,14 +63,6 @@ def read_documents_csv(spark: SparkSession, path: str) -> DataFrame:
         .schema(DOCUMENTS_SCHEMA)
         .csv(path)
     )
-
-
-def read_file_info_json(spark: SparkSession, path: str) -> DataFrame:
-    """S4/S5: info.json metadata scan (glob over ``meta/**/info.json``).
-
-    Reference: ftm_datalake/archive/dataset.py:43-45, sync/memorious.py:44-45.
-    """
-    return spark.read.schema(FILE_INFO_SCHEMA).json(path)
 
 
 def scan_binary_files(spark: SparkSession, path: str, glob: str | None = None) -> DataFrame:

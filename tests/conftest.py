@@ -20,6 +20,11 @@ def spark():
         extra_conf={
             "spark.ui.enabled": "false",
             "spark.driver.memory": "4g",
+            # Stage meters (tests/test_crawl_work.py) read stage records
+            # back from the status store. Past retainedStages (default
+            # 1000) each cleanup evicts skipped stages first, including
+            # those of the job that just ran, so keep the whole session.
+            "spark.ui.retainedStages": "1000000",
             # keep saveAsTable output out of the repo cwd
             "spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark-wh-"),
         },

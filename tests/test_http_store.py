@@ -154,6 +154,12 @@ def test_exclude_prunes_before_fetch(spark, http_store, monkeypatch):
     # excluded keys were never handed to the fetcher at all
     assert set(fetched) == keys
 
+    # globs are start-anchored: 'deep/*' does not match 'sub/deep/leaf.bin'
+    fetched.clear()
+    out = hs.crawl_scan_http(spark, base, "ds", include="deep/*")
+    assert out.count() == 0
+    assert fetched == []
+
 
 def test_crawl_http_full_pipeline_and_incremental(spark, tmp_path, monkeypatch):
     """crawl_http e2e: initial crawl lands every file in the documents

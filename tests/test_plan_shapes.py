@@ -259,37 +259,11 @@ def test_no_registry_query_plans_a_cartesian_product(spark, sf_dir):
     builder that localCheckpoints truncates its final plan's lineage,
     so PLAN_AUDIT must annotate it — an untagged checkpointing builder
     (or a stale tag on one that no longer checkpoints) fails here."""
-    import pyspark.sql.classic.dataframe as _cdf
-
     from ftm_datalake_spark.plans import REGISTRY
-    from ftm_datalake_spark.plans.lint import BNLJ_OK
 
-    offenders, rogue_single, rogue_bnlj, ckpt_hits = [], [], [], set()
-    orig_ckpt = _cdf.DataFrame.localCheckpoint
-    current = [None]
-
-    def spy(self, eager=True):
-        ckpt_hits.add(current[0])
-        return orig_ckpt(self, eager)
-
-    _cdf.DataFrame.localCheckpoint = spy
-    try:
-        for name, spec in sorted(REGISTRY.items()):
-            current[0] = name
-            plan = (
-                spec.builder(spark, sf_dir)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            if "CartesianProduct" in plan:
-                offenders.append(name)
-            if "Exchange SinglePartition" in plan and name not in GLOBAL_SCALAR_OK:
-                rogue_single.append(name)
-            if "BroadcastNestedLoopJoin" in plan and name not in BNLJ_OK:
-                rogue_bnlj.append(name)
-    finally:
-        _cdf.DataFrame.localCheckpoint = orig_ckpt
+    offenders, rogue_single, rogue_bnlj, ckpt_hits = _sweep_plans(
+        spark, sf_dir, REGISTRY.keys()
+    )
     assert not offenders, f"cartesian products in: {offenders}"
     assert not rogue_single, f"undocumented single-partition exchange in: {rogue_single}"
     assert not rogue_bnlj, (

@@ -133,6 +133,14 @@ def test_exclude_prunes_before_fetch(spark, s3_store, monkeypatch):
     assert keys == {k for k in FILES if not k.startswith("sub/")}
     assert set(fetched) == keys
 
+    # globs are start-anchored: 'deep/*' does not match 'sub/deep/leaf.bin'
+    fetched.clear()
+    out = ss.crawl_scan_s3(
+        spark, BUCKET, "ds", prefix="scoped", include="deep/*", conn=conn
+    )
+    assert out.count() == 0
+    assert fetched == []
+
 
 def test_crawl_s3_full_pipeline_and_incremental(spark, tmp_path, s3_store):
     """crawl_s3 e2e: initial crawl lands every file in the documents
