@@ -73,7 +73,7 @@ def build_ivf_index(
         centroids
         if centroids is not None
         else ivf_centroids(embeddings, cluster_col, emb_col)
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     cents.write.mode("overwrite").parquet(os.path.join(out_dir, "centroids"))
 
     corpus = _with_quantized(embeddings, emb_col).select(
@@ -287,7 +287,7 @@ def enable_pq(
         "dims": dims,
         "codebooks": codebook,
     }
-    encoded = _with_pq_codes(rows, meta).localCheckpoint(eager=True)
+    encoded = _with_pq_codes(rows, meta).localCheckpoint()
     # Stage the COMPLETE index (encoded postings + pq_meta + the
     # existing centroids/index_meta carried over) in a sibling of
     # out_dir and swap ONCE at out_dir — the same crash-window
@@ -396,7 +396,7 @@ def append_ivf_index(
         # codebooks (appending never retrains — the refresh verb is
         # rebuild(pq=True))
         assigned_all = _with_pq_codes(assigned_all, pq_meta)
-    assigned_all = assigned_all.localCheckpoint(eager=True)
+    assigned_all = assigned_all.localCheckpoint()
     # the delta's cluster set bounds both the anti-join read and the
     # write (bounded collect: <= n_clusters ints)
     touched_all = sorted(
@@ -407,7 +407,7 @@ def append_ivf_index(
         return {"appended": 0, "clusters_touched": []}
     assigned = assigned_all.join(
         _existing_vids(spark, postings_dir, touched_all), "vid", "left_anti"
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     touched = sorted(
         int(r["cluster"])
         for r in assigned.select("cluster").distinct().collect()
@@ -438,7 +438,7 @@ def compact_ivf_postings(
     rows are the same (vid, q, norm2) tuples, only file boundaries
     change — law-tested in tests/test_ann_index.py. Untouched
     partitions are never read or written, so incremental compaction
-    after each fold is O(touched lists), not O(index); the eager
+    after each fold is O(touched lists), not O(index); the
     checkpoint pins only the selected lists (bounded by the same
     choice). Mirrors compact_segment_ledger (training_export.py)."""
     from ftm_datalake_spark import fsutil
@@ -459,9 +459,8 @@ def compact_ivf_postings(
             "files_before": files_before,
             "files_after": files_before,
         }
-    subset = _read_clusters(spark, postings_dir, selected).localCheckpoint(
-        eager=True  # pin: source partitions are overwritten
-    )
+    # pin: source partitions are overwritten
+    subset = _read_clusters(spark, postings_dir, selected).localCheckpoint()
     (
         subset.repartition(len(selected), "cluster")
         .write.mode("overwrite")
@@ -568,7 +567,7 @@ def rebuild_ivf_index(
             ).alias("cq"),
             "n",
         )
-    cents = centroids.localCheckpoint(eager=True)
+    cents = centroids.localCheckpoint()
     carry = rows.select("vid", "q", "norm2", *code_cols)
     if pq:
         # the codebook refresh: retrain from the CURRENT postings and
@@ -584,7 +583,7 @@ def rebuild_ivf_index(
         )
     assigned = _assign_to_centroid(
         carry, cents.select("cluster", "cq")
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
 
     staged = out_dir.rstrip("/") + ".__rebuild__"
     fsutil.delete(spark, staged)
@@ -737,7 +736,7 @@ def ivf_index_topk(
         F.col("q").alias("qq"),
         F.col("norm2").alias("qn"),
         F.col("cluster"),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     probed = sorted(
         int(r["cluster"])
         for r in qs_assigned.select("cluster").distinct().collect()
@@ -808,7 +807,7 @@ def _ivf_index_topk_pq(
             ).alias(f"dtab{s}")
             for s in range(n_subspaces)
         ],
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     probed = sorted(
         int(r["cluster"])
         for r in qtabs.select("cluster").distinct().collect()
@@ -838,7 +837,7 @@ def _ivf_index_topk_pq(
     # exact re-rank stage: fetch q ONLY for the candidate rows (a
     # broadcast semi-join into the probed partitions — |queries| * k *
     # refine rows, never the lists wholesale)
-    cand = ranked.select("qid", "nid").localCheckpoint(eager=True)
+    cand = ranked.select("qid", "nid").localCheckpoint()
     full = _read_clusters(
         spark, os.path.join(out_dir, "postings"), probed
     ).select(F.col("vid").alias("nid"), F.col("q").alias("nq"))

@@ -31,8 +31,6 @@ def bfs_distances(
     spark = edges.sparkSession
     # materialize the edge list once — every round joins against it, and
     # re-deriving it per round would rescan/rejoin the source tables
-    # Eager pin (kept eager on the r15 re-audit; see sssp.py — the
-    # per-round edge-side map stages schedule concurrently).
     edges = edges.localCheckpoint()
     dist = spark.createDataFrame([(seed, 0)], "node long, dist long")
     for _ in range(max_depth):
@@ -47,6 +45,6 @@ def bfs_distances(
             dist.unionByName(step)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return dist

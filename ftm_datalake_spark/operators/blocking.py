@@ -169,7 +169,7 @@ def entity_match(
         # (doc_id, source, token) materialization feeds both (guide
         # §2.4; the connected_components/pagerank policy). Callers
         # must be registered checkpointed=True.
-        postings = postings.localCheckpoint(eager=True)
+        postings = postings.localCheckpoint()
     keys = rare_token_block_keys(postings, k, carry_tokens=True)
     # Purge with a same-key window BEFORE collecting members: oversized
     # (stopword-like) blocks are dropped without ever materializing

@@ -134,7 +134,7 @@ def bpe_train(
     input to :func:`encode_token_counts`. Driver-side state is one row
     per learned merge.
     """
-    vocab = with_symbols(word_vocab(docs, text_col)).localCheckpoint(eager=False)
+    vocab = with_symbols(word_vocab(docs, text_col)).localCheckpoint()
     merges: list[tuple[str, str, int]] = []
     for _ in range(num_merges):
         best = (
@@ -149,7 +149,7 @@ def bpe_train(
         merges.append((left, right, freq))
         vocab = vocab.withColumn(
             "syms", merge_adjacent(F.col("syms"), left, right)
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
     return merges, vocab
 
 

@@ -99,13 +99,7 @@ def kmeans(
     # released by the ContextCleaner when the returned frame is
     # dropped. Callers that register queries over the returned frame
     # must be tagged checkpointed=True.
-    # r15: the pin is LAZY — the seed collect just below is the first
-    # mandatory driver read anyway, so it doubles as the materializing
-    # action (was: an eager checkpoint job THEN the seed job — one
-    # extra blocking round-trip per kmeans call, guide §5). Every
-    # later consumer (Lloyd iterations, returned assignment) still
-    # reads the pinned quantized corpus.
-    q_df = q_df.localCheckpoint(eager=False)
+    q_df = q_df.localCheckpoint()
     seeds = (
         q_df.withColumn("__ord", F.md5(F.col("vec_id").cast("string")))
         .orderBy("__ord", "vec_id")

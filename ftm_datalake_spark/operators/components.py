@@ -27,18 +27,14 @@ def connected_components(
     min node id reachable. Deterministic for any input order."""
     # One checkpoint of the raw pairs, THEN the direction flip: the old
     # union referenced the upstream (often expensive) edge plan twice
-    # inside a single job (r14, guide §1.2). r15: the pins are LAZY —
-    # each round's n_changed count (a mandatory driver read) is the
-    # materializing action, so build-time blocking jobs halve while the
-    # plan truncation is identical (lazy localCheckpoint swaps the
-    # logical plan for a LogicalRDD immediately; guide §5).
+    # inside a single job (r14, guide §1.2).
     base = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     both = base.unionByName(
         base.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    both = both.distinct().localCheckpoint(eager=False)
+    both = both.distinct().localCheckpoint()
 
     labels = (
         both.select(F.col("a").alias("node"))
@@ -65,7 +61,7 @@ def connected_components(
                     < F.col("component")
                 ).alias("changed"),
             )
-        ).localCheckpoint(eager=False)
+        ).localCheckpoint()
         n_changed = updated.where(F.col("changed")).count()
         labels = updated.drop("changed")
         if n_changed == 0:
@@ -98,26 +94,19 @@ def connected_components_star(
     node id (AQE-skew-safe); per-round driver sync is a 2-value aggregate
     (count + checksum) for the convergence test."""
     # Materialize the upstream pipeline ONCE (r14, guide §1.2/§2.4):
-    # `nodes` and `e` previously each carried their own eager
+    # `nodes` and `e` previously each carried their own
     # localCheckpoint, so the (often expensive) edge-producing plan —
     # e.g. er_golden_record's full entity_match — executed twice before
     # the first CC round. One narrow (src, dst) checkpoint feeds both;
     # the node set and edge canonicalization are cheap projections of it.
-    # r15: all pins LAZY (guide §5 driver round-trips) — the initial
-    # `_signature(e)` read is the action that materializes base+e in a
-    # single job (was: three eager checkpoint jobs + the signature job),
-    # and `nodes` materializes inside the first job that consumes it
-    # (the caller's own action on the returned labels). Plan truncation
-    # is identical: lazy localCheckpoint swaps the logical plan for a
-    # LogicalRDD at construction time.
     base = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
-    ).localCheckpoint(eager=False)
+    ).localCheckpoint()
     nodes = (
         base.select(F.col("a").alias("node"))
         .unionByName(base.select(F.col("b").alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     e = (
         base.select(
@@ -126,7 +115,7 @@ def connected_components_star(
         )
         .where(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
 
     def _signature(df: DataFrame) -> tuple[int, int]:
@@ -182,14 +171,9 @@ def connected_components_star(
                 F.least(F.col("a"), F.col("b")).alias("v"),
             )
             .distinct()
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
         rounds += 1
-        # The signature read is the materializing action for this
-        # round's lazy pin: one job per round executes the round's
-        # shuffles AND pins the edge set (was: an eager checkpoint job
-        # followed by a separate signature job — 2 blocking driver
-        # round-trips per round, r15 guide §5).
         new_sig = _signature(small)
         e = small
         if new_sig == sig:

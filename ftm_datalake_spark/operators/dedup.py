@@ -79,9 +79,7 @@ def ngram_jaccard_pairs(
     of the narrow (doc_id, shingle) relation replaces three
     scan+tokenize+explode runs. Registry callers must be tagged
     checkpointed=True."""
-    sh = shingle_postings(df, text_col, id_col, k).localCheckpoint(
-        eager=True
-    )
+    sh = shingle_postings(df, text_col, id_col, k).localCheckpoint()
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -205,7 +203,7 @@ def minhash_lsh_pairs(
         minhash_signatures(postings, num_hashes), num_hashes, rows_per_band
     )
     if materialize_bands:
-        bands = bands.localCheckpoint(eager=True)
+        bands = bands.localCheckpoint()
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -300,12 +298,7 @@ def prefix_filter_pairs(
         )
         .distinct()
         # feeds freq AND the packed/mask join in both branches (§2.4).
-        # r15 (ADVICE r14): LAZY pin — the vocabulary probe just below
-        # is the first mandatory driver read, and its job materializes
-        # tok as a side effect, so the routing count is the ONLY
-        # eager job paid at construction time (was: a full corpus
-        # scan for the checkpoint plus the probe).
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     freq = tok.groupBy("token").agg(F.count("*").alias("f"))
     if freq.count() <= _BITSET_VOCAB_MAX:
@@ -327,7 +320,7 @@ def prefix_filter_pairs(
             F.transform("__s", lambda s: s["token"]).alias("toks"),
             F.size("__s").alias("m"),
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     # prefix length: m - ceil(t*m) + 1, ceil as exact integer
     # arithmetic; clamped at 0 (ADVICE r14) so a degenerate threshold
@@ -452,7 +445,7 @@ def _prefix_filter_pairs_bitset(
         )
         # feeds the prefix explode (both join sides) + both expansion
         # joins — one narrow class-scale relation (§2.4)
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     # Ascending set-bit ids of the mask == the class's tokens in
     # rarest-first order; the prefix is the first plen of them.
@@ -605,7 +598,7 @@ def duplicate_span_coverage(
         .select(
             "doc_id", "n_tokens", F.posexplode(gram_arr).alias("pos", "h")
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     dup_hashes = (
         grams.groupBy("h")

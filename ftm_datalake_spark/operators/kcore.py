@@ -43,11 +43,8 @@ def kcore(
     (src, dst). `deg` is the degree in the induced subgraph after the
     final peel.
     """
-    # Eager pin (kept eager on the r15 re-audit): the edge frame is
-    # consumed by CONCURRENT stages of the first peel (degree agg map
-    # side and both semi-join map sides) — a lazy pin loses the
-    # once-only-compute guarantee when independent consumer stages
-    # schedule in parallel before any block is pinned.
+    # the edge frame feeds the first peel three times (degree agg and
+    # both semi-joins): pin it so the upstream runs once
     edges = edges.localCheckpoint()
     for _ in range(rounds):
         keep = _degrees(edges).where(F.col("deg") >= k).select("node")
@@ -57,6 +54,6 @@ def kcore(
             )
             .join(keep.withColumnRenamed("node", "dst"), "dst", "semi")
             .select("src", "dst")
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return _degrees(edges)

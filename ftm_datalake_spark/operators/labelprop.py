@@ -44,23 +44,13 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     directed edge list ``edges(src, dst)``. Symmetrize before calling
     for undirected semantics. Nodes with no in-edges keep their own id.
     """
-    # Pre-loop pins stay EAGER (r15 re-audit): `edges` is consumed by
-    # every round's vote-join map stage and those stages are
-    # independent of the label chain, so they can schedule
-    # concurrently — a lazy pin would lose the once-only-compute
-    # guarantee for the edge repartition. The in-loop label pins are
-    # lazy (r14) because each round's chain is strictly sequential.
-    edges = (
-        edges.select("src", "dst").repartition("src").localCheckpoint(eager=True)
-    )
+    edges = edges.select("src", "dst").repartition("src").localCheckpoint()
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
         .distinct()
     )
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint(
-        eager=True
-    )
+    labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
     for _ in range(iters):
         votes = (
             edges.join(labels, edges["src"] == labels["node"])
@@ -79,19 +69,13 @@ def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
         # isolated / no-in-edge nodes keep their previous label; the
         # per-round pin stops labels' double-reference from doubling
         # the lineage every iteration (see module docstring).
-        # r14: eager=False (the bfs/sssp in-loop precedent) — an eager
-        # pin made each superstep a blocking driver round-trip at
-        # BUILD time (4 sequential jobs before the query's own action
-        # ran); a lazy pin truncates lineage identically but lets the
-        # final action schedule the supersteps back-to-back without
-        # py4j stalls between them. A/B in OPTIMIZATION_r14.md.
         labels = (
             labels.select("node", F.col("label").alias("prev"))
             .join(winner, "node", "left")
             .select(
                 "node", F.coalesce(F.col("label"), F.col("prev")).alias("label")
             )
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return labels.select("node", F.col("label").alias("community"))
 

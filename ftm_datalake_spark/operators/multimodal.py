@@ -1558,7 +1558,7 @@ def phash_neardup_pairs(
         raise ValueError("8x8-bit banding guarantees recall only to Hamming 7")
     hashed = feats.where(F.col("phash").isNotNull())
     if materialize:
-        hashed = hashed.localCheckpoint(eager=True)
+        hashed = hashed.localCheckpoint()
     bands = hashed.select(
         "media_id",
         "phash",

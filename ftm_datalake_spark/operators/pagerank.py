@@ -22,7 +22,7 @@ unrolled iteration then reads the checkpointed scan instead of
 re-deriving distinct+degree+join from scratch. The pin does NOT carry
 hashpartitioning(src) into the loop: with AQE on (the session.py
 default) the checkpointed scan reports UnknownPartitioning(0) on Spark
-4.1, eager or lazy, with or without a partition count, so every
+4.1, with or without a partition count, so every
 iteration's join still shuffles the edge frame on src. Only AQE off
 keeps the partitioning. This cut the static plan from 85 exchanges / 46
 broadcasts (pre-rewrite, PLAN_AUDIT.md r6) to 12 exchanges / 1
@@ -59,22 +59,16 @@ def pagerank_fixed(edges: DataFrame, iterations: int = 5) -> DataFrame:
     # survive the pin under AQE (the scan reports UnknownPartitioning,
     # see module docstring): each iteration's join re-shuffles this
     # frame on src.
-    edges_deg = (
-        edges.join(deg, "src").repartition("src").localCheckpoint(eager=False)
-    )
+    edges_deg = edges.join(deg, "src").repartition("src").localCheckpoint()
     # r14: localCheckpoint, not persist — persist registers the entry in
     # the plan-keyed CacheManager, so a later pagerank over the same
     # edges silently served this call's node set (cross-run reuse the
     # bench must not get; the kmeans fix, applied here). Identity-keyed
     # checkpoint gives the same within-call reuse for n/count + ranks.
-    # r15: both pins LAZY — the mandatory n = nodes.count() driver read
-    # below is the materializing action for edges_deg AND nodes in ONE
-    # job (was: two eager checkpoint jobs + the count — 3 blocking
-    # round-trips at build time, guide §5). Truncation is identical.
     nodes = (
         edges_deg.select(F.col("src").alias("node"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint()
     )
     n = nodes.count()
     base = (SCALE * 15 // 100) // n

@@ -398,9 +398,7 @@ def ivf_topk(
     # the corpus to rebuild the same k-row centroid table. One
     # localCheckpoint (k rows) feeds both broadcasts; registry callers
     # must be tagged checkpointed=True.
-    cents = ivf_centroids(embeddings, cluster_col, emb_col).localCheckpoint(
-        eager=True
-    )
+    cents = ivf_centroids(embeddings, cluster_col, emb_col).localCheckpoint()
     corpus = _with_quantized(embeddings, emb_col).select(
         F.col(id_col).alias("vid"), "q", "norm2"
     )

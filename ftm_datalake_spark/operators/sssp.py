@@ -34,10 +34,7 @@ def bellman_ford(
     """(node, dist) minimum path weight from `seed` using ≤ `rounds`
     edges; nodes unreachable within the bound are absent."""
     spark = edges.sparkSession
-    # Eager pin (kept eager on the r15 re-audit): every round's join
-    # map stage over `edges` is independent of the dist chain, so all
-    # R of them can schedule concurrently at job start — a lazy pin
-    # would let them duplicate the upstream edge compute.
+    # materialize the edge list once — every round joins against it
     edges = edges.localCheckpoint()
     dist = spark.createDataFrame([(seed, 0)], "node long, dist long")
     for _ in range(rounds):
@@ -49,6 +46,6 @@ def bellman_ford(
             dist.unionByName(step)
             .groupBy("node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
+            .localCheckpoint()
         )
     return dist

@@ -208,7 +208,7 @@ def segment_dedup(
         # checkpointed=True. Opt-in because the materialization
         # carries the segment text payload — callers with a
         # freq_table already read the corpus once.
-        segs = segs.localCheckpoint(eager=True)
+        segs = segs.localCheckpoint()
     if freq_table is not None:
         freq = freq_table.select("seg_key", F.col("n").cast("long").alias("n"))
     else:

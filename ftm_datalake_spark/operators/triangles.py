@@ -42,8 +42,6 @@ def triangles(edges: DataFrame) -> DataFrame:
     three-way self-join: Spark does not share common subtrees across
     self-join branches, so without it the whole upstream edge
     construction would execute once per branch."""
-    # Eager pin (kept eager on the r15 re-audit): both sides of the
-    # wedge self-join consume `o` in concurrent map stages.
     o = orient_edges(edges).localCheckpoint()
     e1 = o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     e2 = o.select(F.col("src").alias("b"), F.col("dst").alias("c"))

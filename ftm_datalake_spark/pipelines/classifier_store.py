@@ -54,9 +54,7 @@ def build_classifier_model(
 ) -> int:
     """Full build: write the training corpus's counts as the ledger's
     base. Returns the distinct (label, token) row count."""
-    counts = token_counts(train_docs, label_col, text_col).localCheckpoint(
-        eager=True
-    )
+    counts = token_counts(train_docs, label_col, text_col).localCheckpoint()
     TOK_LEDGER.write_base(spark, model_dir, counts)
     return counts.count()
 
@@ -73,8 +71,7 @@ def append_classifier_model(
     Re-delivering the same delta (by doc-id identity) is a no-op.
     Returns {delta_id, rows_appended, skipped}."""
     delta_id = delta_gen_id(delta_docs)
-    # lazy pin: nothing runs when the generation is already committed;
-    # otherwise the write materializes it and the count reads the pin
+    # pin: the write and the row count read one computation
     counts = token_counts(delta_docs, label_col, text_col).localCheckpoint()
     skipped = TOK_LEDGER.append(spark, model_dir, delta_id, counts)
     return {

@@ -215,7 +215,7 @@ class GenLedger:
         directory and swapped in — a truncating overwrite of the live
         ledger would have a window where a crash loses every
         generation."""
-        merged = self.read(spark, root).localCheckpoint(eager=True)
+        merged = self.read(spark, root).localCheckpoint()
         ledger = self.path(root).rstrip("/")
         staged = ledger + ".__new__"
         fsutil.delete(spark, staged)

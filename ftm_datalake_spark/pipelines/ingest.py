@@ -359,7 +359,7 @@ def crawl_keys(
     if isinstance(keys, DataFrame):
         # pin: the listing feeds the total count and the anti-join
         listing = _glob_where(keys, include, exclude)
-        listing = listing.localCheckpoint(eager=True)
+        listing = listing.localCheckpoint()
         n_total = listing.count()
     else:  # a store walk is already on the driver: filter and count it there
         keys = _glob_keep(keys, include, exclude)
@@ -368,7 +368,7 @@ def crawl_keys(
     n_before = current.count()
     new_keys = listing.join(
         current.select("key"), "key", "left_anti"
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     n_new = new_keys.count()
     n_after = n_before
     if n_new:

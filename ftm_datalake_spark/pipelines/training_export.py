@@ -137,7 +137,7 @@ def export_training(
     # export_training_incremental's O(|delta|) path.
     from ftm_datalake_spark.operators.textops import segment_frequencies
 
-    freq = segment_frequencies(kept).localCheckpoint(eager=True)
+    freq = segment_frequencies(kept).localCheckpoint()
     SEG_LEDGER.write_base(spark, out_dir, freq)
     cleaned = (
         segment_dedup(kept, keep_text=True, freq_table=freq)
@@ -669,7 +669,7 @@ def export_training_incremental(
 
     delta_freq = None
     if SEG_LEDGER.present(spark, out_dir):
-        delta_freq = segment_frequencies(kept).localCheckpoint(eager=True)
+        delta_freq = segment_frequencies(kept).localCheckpoint()
         # only the DELTA's seg_keys matter to the delta's cleaning —
         # semi-join the ledger down to them BEFORE the sum, so the fold
         # never runs a corpus-wide aggregate (the ledger scan stays a

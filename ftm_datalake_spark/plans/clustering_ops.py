@@ -149,9 +149,7 @@ def _sem_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     assigned, _ = C.kmeans(base, k=_K, iters=_ITERS, dims=_DIMS)
-    return assigned.withColumn("n2", int_norm2(F.col("q"))).localCheckpoint(
-        eager=True
-    )
+    return assigned.withColumn("n2", int_norm2(F.col("q"))).localCheckpoint()
 
 
 def _sem_pairs(spark: SparkSession, assigned: DataFrame) -> DataFrame:

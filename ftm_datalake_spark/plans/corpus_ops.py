@@ -494,8 +494,8 @@ def sketch_theta_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # events scan + per-partition rank ran ~10× (44 parquet scans /
     # 118 exchanges in the static plan). Each sketch is ≤ k = 32 rows:
     # pin both once, and every downstream set-op is metadata-scale.
-    ska = kmv_sketch(users("click"), 32).localCheckpoint(eager=True)
-    skb = kmv_sketch(users("purchase"), 32).localCheckpoint(eager=True)
+    ska = kmv_sketch(users("click"), 32).localCheckpoint()
+    skb = kmv_sketch(users("purchase"), 32).localCheckpoint()
     return kmv_set_estimates(ska, skb, 32).orderBy("set_op")
 
 

@@ -274,7 +274,7 @@ def quality_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", F.explode(ngram_array(F.col("tk"), 3)).alias("trigram")
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     lm = tri.groupBy("trigram").agg(F.count("*").alias("freq"))
     floor_log2 = F.length(F.conv(F.col("freq"), 10, 2)) - 1
@@ -288,7 +288,7 @@ def quality_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long")
             .alias("score")
         )
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     sc = doc.groupBy("score").agg(F.count("*").alias("n"))
     wcum = Window.orderBy("score").rowsBetween(Window.unboundedPreceding, 0)

@@ -192,7 +192,7 @@ def events_gapfill_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(12,2)")).cast("double").alias(
             "hour_value"
         ),
-    ).localCheckpoint(eager=True)
+    ).localCheckpoint()
     grid = (
         hourly.groupBy("user_id")
         .agg(F.min("hour").alias("h0"), F.max("hour").alias("h1"))

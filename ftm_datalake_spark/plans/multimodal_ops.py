@@ -31,10 +31,12 @@ def _spread_ids(spark: SparkSession, docs: DataFrame) -> DataFrame:
     — the dominant cost of these queries — inherits 1-2 partitions and
     runs on 1-2 cores. Spreading the 8-byte ids costs one trivial
     shuffle and lets the Python stage use every core; the id hash is
-    uniform, so the spread is even at any scale."""
-    return docs.repartition(
-        max(2, spark.sparkContext.defaultParallelism), "doc_id"
+    uniform, so the spread is even at any scale. A scan already wider
+    than the session keeps its width: the respread never narrows it."""
+    width = max(
+        2, spark.sparkContext.defaultParallelism, docs.rdd.getNumPartitions()
     )
+    return docs.repartition(width, "doc_id")
 
 
 def _synth_ppm_media(spark: SparkSession, sf_dir: str) -> DataFrame:

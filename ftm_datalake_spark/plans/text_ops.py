@@ -412,7 +412,7 @@ def dedup_verified_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the verification sides + per-doc counts —
     # before, the scan+tokenize+shingle subtree executed once per
     # consumer (the dedup_lsh_recall fix applied here).
-    sh = D.shingle_postings(docs).localCheckpoint(eager=True)
+    sh = D.shingle_postings(docs).localCheckpoint()
     cand = D.minhash_lsh_pairs(sh)
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
@@ -599,7 +599,7 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-doc counts) AND the MinHash band build. Before, the scan+tokenize+shingle-explode subtree
     # executed once per consumer — 32 parquet scans / 42 exchanges in
     # the static plan; after, the corpus is scanned and shingled once.
-    sh = D.shingle_postings(docs).localCheckpoint(eager=True)
+    sh = D.shingle_postings(docs).localCheckpoint()
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")
@@ -625,12 +625,12 @@ def dedup_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
         .where(F.col("common") * 5 >= uni * 4)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     cand = (
         D.minhash_lsh_pairs(sh)
         .select("doc_a", "doc_b")
-        .localCheckpoint(eager=True)
+        .localCheckpoint()
     )
     hit = truth.join(cand, ["doc_a", "doc_b"])
     n_truth = truth.agg(F.count("*").alias("n_truth"))
@@ -1068,7 +1068,7 @@ def dedup_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _augmented_docs(spark, sf_dir)
     # r15 (guide §2.4): the shingle table feeds THREE consumers (both
     # overlap-join halves + the per-doc counts) — pinned once.
-    sh = D.shingle_postings(docs).localCheckpoint(eager=True)
+    sh = D.shingle_postings(docs).localCheckpoint()
     cnt = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.alias("a")
     b = sh.alias("b")

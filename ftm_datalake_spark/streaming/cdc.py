@@ -168,7 +168,7 @@ def run_cdc_upsert_stream_partitioned(
         merged = (
             apply_cdc(snap, b, key_cols)
             .select(*snap.columns)
-            .localCheckpoint(eager=True)
+            .localCheckpoint()
         )
         # per-WRITE dynamic mode (DataFrameWriter option, takes
         # precedence over the session conf): no global-state mutation

@@ -216,6 +216,7 @@ def test_inventory_manifest_crawl_matches_listing_crawl(spark, tmp_path):
     DataFrame yields the exact same documents table as the
     ListObjectsV2 crawl — and the manifest path never collects keys to
     the driver (DataFrame.collect is poisoned for the duration)."""
+    import pyspark.sql.classic.dataframe as cdf
     from moto.server import ThreadedMotoServer
     from pyspark.sql import DataFrame as SparkDF
 
@@ -262,9 +263,11 @@ def test_inventory_manifest_crawl_matches_listing_crawl(spark, tmp_path):
 
         inv_keys = read_s3_inventory(spark, inv_dir, prefix="corp")
         assert isinstance(inv_keys, SparkDF)
-        # poison collect: the manifest crawl must be driver-collect-free
-        real_collect = SparkDF.collect
-        SparkDF.collect = lambda self: (_ for _ in ()).throw(
+        # poison collect: the manifest crawl must be driver-collect-free.
+        # A classic session's frames are cdf.DataFrame, which overrides
+        # collect, so poisoning pyspark.sql.DataFrame would never fire.
+        real_collect = cdf.DataFrame.collect
+        cdf.DataFrame.collect = lambda self: (_ for _ in ()).throw(
             AssertionError("driver-side collect in the manifest crawl path")
         )
         try:
@@ -278,7 +281,7 @@ def test_inventory_manifest_crawl_matches_listing_crawl(spark, tmp_path):
                 keys=inv_keys,
             )
         finally:
-            SparkDF.collect = real_collect
+            cdf.DataFrame.collect = real_collect
 
         assert stats_manifest == stats_listing
         cols = ["key", "content_hash", "size", "mimetype"]
