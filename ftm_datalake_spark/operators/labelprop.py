@@ -9,25 +9,35 @@ Determinism spec (both engines implement exactly this):
   broken by the lexicographically smallest label;
 - K iterations, synchronous (iteration k reads only labels from k-1).
 
-Scale shape: per iteration one hash join (labels onto the edge list's
-src side) and one two-level aggregation — partial counts per
-(dst, label), then an exact arg-max per dst via ``min(struct(-cnt,
-label))`` so no window/sort is needed. The labels frame is node-scale
-(≪ edge-scale); at 100 TB edge lists the join shuffles edges once per
-iteration on src, which is the textbook Pregel cost.
+One plan, one vote per round. The edge list is pinned once; the K
+rounds are then one lazy plan that the caller's action runs. A round
+joins the labels onto the edge list's src side and takes one
+aggregation per dst, ``mode(label, deterministic=True)``: Spark's
+deterministic mode is the most frequent value with ties to the lowest,
+which is the spec's plurality over edge occurrences with ties to the
+smallest label. Nodes with no in-edges never get a vote, so they keep
+their own id forever: that ``fixed`` set is unioned onto every round's
+votes. Every other node has an in-edge from a labeled node, so each
+round's result covers every node and reads the previous labels once.
 
-Plan diet (mirrors operators/pagerank.py round-7/8 hardening): the
-edge frame is repartitioned on src and localCheckpointed ONCE before
-the loop, so rounds scan the pin instead of the source. The pin does
-not keep hashpartitioning(src): with AQE on (the session.py default)
-the checkpointed scan reports UnknownPartitioning(0), so each round's
-vote join re-shuffles the edge list on src (see operators/pagerank.py).
-The node-scale labels frame is localCheckpointed every round — labels
-feeds BOTH the vote join and the keep-old-label fallback, so without
-the per-round pin the lineage doubles each iteration (measured: 116
-static exchanges for K=4 un-pinned vs ~6 pinned). Per-round
-materialization of a node-scale frame is the standard Pregel superstep
-barrier.
+With one reference to the labels per round the plan grows linearly in
+K, by 5 static exchanges per round (measured at K = 1..8; a second
+reference per round, such as a keep-old-label join, doubles the plan
+every round). The pin does not keep any partitioning: with AQE on (the
+session.py default) a checkpointed scan reports UnknownPartitioning(0),
+so each round's vote join shuffles the edge list on src — the textbook
+Pregel cost, an edge-scale shuffle per iteration, while the labels
+frame is node-scale.
+
+The rounds run as one adaptive plan, so its stages must be planned in
+the same order on every run: the codegen stage id is part of each
+generated class, and a plan whose stages are numbered in a different
+order compiles its classes anew. Two things keep that order fixed. The
+node set and the ``fixed`` set come from ONE aggregation over the edge
+ends (a node is fixed iff no end of it is a dst), so no side branch
+finishes at a time of its own. And the vote join is a left join from
+the edges, whose build side can only be the labels: under an inner
+join AQE broadcasts whichever small side finishes first.
 
 No reference counterpart (the reference has no graph operators); this
 completes the graph family next to pagerank/sssp/kcore/triangles/bfs.
@@ -41,41 +51,32 @@ from pyspark.sql import functions as F
 
 def label_propagation(edges: DataFrame, iters: int = 4) -> DataFrame:
     """(node, community) after ``iters`` synchronous LPA rounds over the
-    directed edge list ``edges(src, dst)``. Symmetrize before calling
-    for undirected semantics. Nodes with no in-edges keep their own id.
+    directed edge list ``edges(src, dst)``, both ends non-null.
+    Symmetrize before calling for undirected semantics. Nodes with no
+    in-edges keep their own id.
     """
-    edges = edges.select("src", "dst").repartition("src").localCheckpoint()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .unionByName(edges.select(F.col("dst").alias("node")))
-        .distinct()
+    edges = edges.select("src", "dst").localCheckpoint()
+    ends = edges.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.lit(False).alias("has_in")),
+                F.struct(F.col("dst").alias("node"), F.lit(True).alias("has_in")),
+            )
+        ).alias("e")
     )
-    labels = nodes.withColumn("label", F.col("node")).localCheckpoint()
+    nodes = ends.groupBy(F.col("e.node").alias("node")).agg(
+        F.max("e.has_in").alias("has_in")
+    )
+    fixed = nodes.where(~F.col("has_in")).select("node", F.col("node").alias("label"))
+    labels = nodes.select("node", F.col("node").alias("label"))
     for _ in range(iters):
-        votes = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(edges["dst"].alias("node"), F.col("label"))
-            .agg(F.count("*").alias("cnt"))
-        )
-        winner = (
-            votes.groupBy("node")
-            .agg(
-                F.min(
-                    F.struct((-F.col("cnt")).alias("nc"), F.col("label"))
-                ).alias("w")
-            )
-            .select("node", F.col("w.label").alias("label"))
-        )
-        # isolated / no-in-edge nodes keep their previous label; the
-        # per-round pin stops labels' double-reference from doubling
-        # the lineage every iteration (see module docstring).
+        # left join: every src holds a label, so the rows are the inner
+        # join's, and only the labels side can be broadcast (see above)
         labels = (
-            labels.select("node", F.col("label").alias("prev"))
-            .join(winner, "node", "left")
-            .select(
-                "node", F.coalesce(F.col("label"), F.col("prev")).alias("label")
-            )
-            .localCheckpoint()
+            edges.join(labels, edges["src"] == labels["node"], "left")
+            .groupBy(edges["dst"].alias("node"))
+            .agg(F.mode("label", deterministic=True).alias("label"))
+            .unionByName(fixed)
         )
     return labels.select("node", F.col("label").alias("community"))
 

@@ -2,11 +2,13 @@
 weighted directed edge list.
 
 Same Pregel-on-relational shape as operators/bfs.py, generalized to
-integer edge weights: each round relaxes every edge out of the current
-distance table (ONE equi-join + ONE hash-agg on the node key), and
-`localCheckpoint` truncates lineage per round. After R rounds the table
-holds the exact minimum-weight path using at most R edges — the
-recurrence a recursive-CTE oracle replays verbatim.
+integer edge weights: the edge list is pinned once, and each round is
+``bfs.relax_round`` with the edge weight as the step — it relaxes every
+edge out of the current distance table and reads that table once (ONE
+left equi-join + ONE min hash-agg on the node key), so the rounds are
+one plan that grows linearly with R and needs no per-round pin. After
+R rounds the table holds the exact minimum-weight path using at most R
+edges — the recurrence a recursive-CTE oracle replays verbatim.
 
 Determinism: weights and distances are exact BIGINTs and min() is
 order-free, so the result is independent of partitioning and engine.
@@ -22,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ftm_datalake_spark.operators.bfs import relax_round
+
 
 def bellman_ford(
     edges: DataFrame,
@@ -35,17 +39,10 @@ def bellman_ford(
     edges; nodes unreachable within the bound are absent."""
     spark = edges.sparkSession
     # materialize the edge list once — every round joins against it
-    edges = edges.localCheckpoint()
+    edges = edges.select(
+        F.col(src).alias("src"), F.col(dst).alias("dst"), F.col(weight).alias("w")
+    ).localCheckpoint()
     dist = spark.createDataFrame([(seed, 0)], "node long, dist long")
     for _ in range(rounds):
-        step = edges.join(dist, edges[src] == dist["node"]).select(
-            F.col(dst).alias("node"),
-            (F.col("dist") + F.col(weight)).alias("dist"),
-        )
-        dist = (
-            dist.unionByName(step)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
+        dist = relax_round(dist, edges, F.col("w"))
     return dist

@@ -71,6 +71,9 @@ def append_classifier_model(
     Re-delivering the same delta (by doc-id identity) is a no-op.
     Returns {delta_id, rows_appended, skipped}."""
     delta_id = delta_gen_id(delta_docs)
+    # a re-delivery costs the id alone: check before building the pin
+    if TOK_LEDGER.committed(spark, model_dir, delta_id):
+        return {"delta_id": delta_id, "rows_appended": 0, "skipped": True}
     # pin: the write and the row count read one computation
     counts = token_counts(delta_docs, label_col, text_col).localCheckpoint()
     skipped = TOK_LEDGER.append(spark, model_dir, delta_id, counts)

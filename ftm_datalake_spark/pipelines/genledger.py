@@ -168,6 +168,10 @@ class GenLedger:
             .withColumn("gen", F.when(gen == "", F.lit("base")).otherwise(gen))
         )
 
+    def committed(self, spark: SparkSession, root: str, gen_id: str) -> bool:
+        """True iff generation ``gen_id`` carries its own ``_SUCCESS``."""
+        return fsutil.dir_committed(spark, self._gen_dir(spark, root, gen_id))
+
     def read_gen(
         self, spark: SparkSession, root: str, gen_id: str
     ) -> DataFrame | None:
@@ -199,11 +203,12 @@ class GenLedger:
         The generation is a DIRECT write into its own directory, so it
         carries its own ``_SUCCESS``: a generation whose job commit
         crashed half-renamed reads as uncommitted and is overwritten
-        here, never skipped (a skip would be a silent undercount)."""
-        gen_dir = self._gen_dir(spark, root, gen_id)
-        if fsutil.dir_committed(spark, gen_dir):
+        here, never skipped (a skip would be a silent undercount).
+        Callers whose ``df`` costs work to build can ask :meth:`committed`
+        first and build nothing for a re-delivery."""
+        if self.committed(spark, root, gen_id):
             return True
-        df.write.mode("overwrite").parquet(gen_dir)
+        df.write.mode("overwrite").parquet(self._gen_dir(spark, root, gen_id))
         return False
 
     def compact(self, spark: SparkSession, root: str) -> int:

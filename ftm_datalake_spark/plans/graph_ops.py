@@ -404,9 +404,10 @@ def _oracle_lpa(iters: int) -> str:
 )
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community id per node after 4 synchronous LPA rounds. Per round:
-    one edges-on-src hash join + a two-level count/arg-min aggregation
-    (no window, no sort) — the Pregel-shaped cost, edge-scale shuffle
-    once per round."""
+    one edges-on-src hash join + one deterministic ``mode`` vote per
+    node (no window, no sort) — the Pregel-shaped cost, edge-scale
+    shuffle once per round. The rounds are one plan over an edge list
+    pinned once."""
     from ftm_datalake_spark.operators.labelprop import label_propagation
 
     li = load_table(spark, sf_dir, "lineitem").select("l_suppkey", "l_orderkey")

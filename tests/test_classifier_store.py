@@ -14,6 +14,8 @@ from ftm_datalake_spark.pipelines.classifier_store import (
     read_classifier_counts,
     read_classifier_model,
 )
+from ftm_datalake_spark.pipelines.genledger import delta_gen_id
+from tests.test_driver_jobs import _jobs
 
 
 def _docs(spark, rows):
@@ -58,6 +60,22 @@ def test_redelivered_delta_is_noop(spark, tmp_path):
     )
     assert again["skipped"] and again["delta_id"] == first["delta_id"]
     assert _model_rows(spark, d) == before
+
+
+def test_skipped_redelivery_runs_only_the_delta_id(spark, tmp_path):
+    """A re-delivered delta costs its identity alone: the committed
+    generation is seen before the token counts are built or pinned."""
+    d = str(tmp_path / "m")
+    build_classifier_model(spark, _docs(spark, _BASE), d)
+    append_classifier_model(spark, _docs(spark, _DELTA), d)
+    delta = _docs(spark, _DELTA)
+    id_jobs = len(_jobs(spark, lambda: delta_gen_id(delta)))
+    out = []
+    redelivery_jobs = len(
+        _jobs(spark, lambda: out.append(append_classifier_model(spark, delta, d)))
+    )
+    assert out[0]["skipped"]
+    assert redelivery_jobs <= id_jobs
 
 
 def test_compaction_preserves_model_and_merges_generations(spark, tmp_path):

@@ -6,7 +6,8 @@ execution:
 - Reading a table the package owns runs no Spark job: every test table
   is loaded with a declared schema, so there is no footer-inference
   job, and the registry builders of the headline read queries run no
-  job at build time either.
+  job at build time either. The label-propagation builder runs only
+  the jobs of its one edge-list pin.
 - Generated code is compiled once per session: running the same
   registry queries a second time compiles no new class. A codegen cache
   smaller than one round of these queries, or generated code that
@@ -32,7 +33,7 @@ BUILD_ONLY = (
     "q5_region_revenue",
     "statement_aggregation",
 )
-# the same queries plus a loop that pins one frame per round
+# the same queries plus a loop that pins its edge list once
 REUSED = BUILD_ONLY + ("graph_label_propagation",)
 
 
@@ -73,6 +74,19 @@ def test_builder_runs_no_job(spark, sf_dir, name):
     from ftm_datalake_spark.plans import REGISTRY
 
     assert _jobs(spark, lambda: REGISTRY[name].builder(spark, sf_dir)) == []
+
+
+def test_label_propagation_builder_runs_at_most_three_jobs(spark, sf_dir):
+    """The LPA builder runs only its edge-list pin; the rounds are one
+    plan that the caller's action runs, so no job runs per round."""
+    from ftm_datalake_spark.plans import REGISTRY
+    from ftm_datalake_spark.session import release_pinned_blocks
+
+    build = REGISTRY["graph_label_propagation"].builder
+    try:
+        assert len(_jobs(spark, lambda: build(spark, sf_dir))) <= 3
+    finally:
+        release_pinned_blocks(spark)
 
 
 def test_second_round_compiles_nothing(spark, sf_dir):

@@ -28,11 +28,23 @@ PLAN_QUERIES = [
 ]
 
 
+def _physical(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def _plan(spark, sf_dir, name: str) -> str:
     from ftm_datalake_spark.plans import REGISTRY
 
-    df = REGISTRY[name].builder(spark, sf_dir)
-    return df._jdf.queryExecution().executedPlan().toString()
+    return _physical(REGISTRY[name].builder(spark, sf_dir))
+
+
+def _exchanges(plan: str) -> int:
+    """Static shuffle exchanges in a physical plan string."""
+    return sum(
+        1
+        for line in plan.splitlines()
+        if line.strip().lstrip("+-:* ").startswith("Exchange ")
+    )
 
 
 @pytest.mark.parametrize("name", PLAN_QUERIES)
@@ -316,11 +328,7 @@ def test_pagerank_plan_budget(spark, sf_dir):
     operators/pagerank.py). A regression back toward re-deriving
     distinct+degree+join per iteration must fail loudly here."""
     plan = _plan(spark, sf_dir, "pagerank_trade_graph")
-    exchanges = sum(
-        1
-        for line in plan.splitlines()
-        if line.strip().lstrip("+-:* ").startswith("Exchange ")
-    )
+    exchanges = _exchanges(plan)
     broadcasts = plan.count("BroadcastExchange")
     assert exchanges <= 20, f"pagerank static exchange count regressed: {exchanges}"
     assert broadcasts <= 8, f"pagerank broadcast count regressed: {broadcasts}"
@@ -336,35 +344,24 @@ def test_bench_queries_within_shuffle_budget(spark, sf_dir):
         if name not in SHUFFLE_BUDGET:
             missing.append(name)
             continue
-        plan = (
-            spec.builder(spark, sf_dir)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        n = sum(
-            1
-            for line in plan.splitlines()
-            if line.strip().lstrip("+-:* ").startswith("Exchange ")
-        )
+        n = _exchanges(_physical(spec.builder(spark, sf_dir)))
         if n > SHUFFLE_BUDGET[name]:
             over.append((name, n, SHUFFLE_BUDGET[name]))
     assert not over, f"shuffle budget exceeded (name, got, budget): {over}"
     assert not missing, f"bench queries without a shuffle budget: {missing}"
 
 
-def test_label_propagation_plan_budget(spark, sf_dir):
-    """Lock in the LPA plan diet (116 static exchanges / 62 broadcasts
-    un-pinned -> single digits after the per-round superstep pin — see
-    operators/labelprop.py). labels feeds two joins per round, so a
-    regression to un-checkpointed lineage doubles the plan every
-    iteration and must fail loudly here."""
-    plan = _plan(spark, sf_dir, "graph_label_propagation")
-    exchanges = sum(
-        1
-        for line in plan.splitlines()
-        if line.strip().lstrip("+-:* ").startswith("Exchange ")
+def test_label_propagation_plan_grows_linearly(spark):
+    """Each LPA round reads the previous labels once, so the K rounds
+    are one plan whose static exchange count grows by the same amount
+    every round (see operators/labelprop.py). A second reference to
+    the labels per round, such as a keep-old-label join without a
+    per-round pin, doubles the growth every round and fails here."""
+    from ftm_datalake_spark.operators.labelprop import label_propagation
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a")], "src string, dst string"
     )
-    broadcasts = plan.count("BroadcastExchange")
-    assert exchanges <= 8, f"LPA static exchange count regressed: {exchanges}"
-    assert broadcasts <= 4, f"LPA broadcast count regressed: {broadcasts}"
+    counts = [_exchanges(_physical(label_propagation(edges, k))) for k in range(1, 9)]
+    steps = {b - a for a, b in zip(counts, counts[1:])}
+    assert len(steps) == 1 and steps.pop() > 0, f"exchanges per K=1..8: {counts}"

@@ -1,10 +1,10 @@
-"""Unit properties for the round-9 operators: synchronous label
-propagation (operators/labelprop.py), the token-vote classifier
-(operators/classifier.py), and the per-source boilerplate audit
-(operators/textops.boilerplate_report_by_source) — hand-built inputs
-with known answers, covering the semantics corners the registry oracle
-exercises only statistically (ties, abstention, isolated nodes,
-df-threshold boundaries)."""
+"""Unit properties for the round-9 operators: the token-vote classifier
+(operators/classifier.py), the per-source boilerplate audit
+(operators/textops.boilerplate_report_by_source) and winnowing —
+hand-built inputs with known answers, covering the semantics corners
+the registry oracle exercises only statistically (ties, abstention,
+df-threshold boundaries). Label propagation's laws live in
+tests/test_labelprop.py."""
 
 from __future__ import annotations
 
@@ -15,64 +15,7 @@ from ftm_datalake_spark.operators.classifier import (
     token_vote_model,
     token_vote_predict,
 )
-from ftm_datalake_spark.operators.labelprop import (
-    community_sizes,
-    label_propagation,
-)
 from ftm_datalake_spark.operators.textops import boilerplate_report_by_source
-
-
-def _sym_edges(spark, pairs):
-    rows = [(a, b) for a, b in pairs] + [(b, a) for a, b in pairs]
-    return spark.createDataFrame(rows, "src string, dst string")
-
-
-# ------------------------------------------------------ label propagation
-
-
-def test_lpa_two_cliques_converge_to_two_communities(spark):
-    # Two triangles joined by nothing: each converges to its own min id.
-    e = _sym_edges(
-        spark, [("a", "b"), ("b", "c"), ("a", "c"), ("x", "y"), ("y", "z"), ("x", "z")]
-    )
-    got = {r["node"]: r["community"] for r in label_propagation(e, iters=4).collect()}
-    assert {got["a"], got["b"], got["c"]} == {"a"}
-    assert {got["x"], got["y"], got["z"]} == {"x"}
-
-
-def test_lpa_tie_breaks_to_smallest_label(spark):
-    # Star center "m" sees neighbors {"a","z"} once each after round 1
-    # (both still hold their own labels) — the tie must go to "a".
-    e = _sym_edges(spark, [("m", "a"), ("m", "z")])
-    got = {r["node"]: r["community"] for r in label_propagation(e, iters=1).collect()}
-    assert got["m"] == "a"
-
-
-def test_lpa_isolated_node_keeps_own_label(spark):
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    # "b" has an in-edge; "a" does not (directed) — "a" keeps itself.
-    got = {r["node"]: r["community"] for r in label_propagation(edges, iters=2).collect()}
-    assert got["a"] == "a"
-    assert got["b"] == "a"
-
-
-def test_lpa_plurality_counts_edge_occurrences(spark):
-    # Duplicate edges count as separate votes: "t" sees label "z" twice
-    # and "a" once — plurality picks "z" even though the tie-break
-    # alone would have picked "a".
-    rows = [("z", "t"), ("z", "t"), ("a", "t")]
-    edges = spark.createDataFrame(rows, "src string, dst string")
-    got = {r["node"]: r["community"] for r in label_propagation(edges, iters=1).collect()}
-    assert got["t"] == "z"
-
-
-def test_lpa_community_sizes_rollup(spark):
-    e = _sym_edges(spark, [("a", "b"), ("x", "y")])
-    sizes = {
-        r["community"]: r["size"]
-        for r in community_sizes(label_propagation(e, iters=4)).collect()
-    }
-    assert sum(sizes.values()) == 4
 
 
 # ------------------------------------------------------ token-vote clf
@@ -237,25 +180,6 @@ def test_winnowing_density_is_sublinear_in_grams(spark):
 
 
 # ---------------------------------------------- partitioning independence
-
-
-def test_lpa_partitioning_independent(spark):
-    """The determinism spec promises the same communities regardless of
-    physical layout — run the same graph at 1 and 13 partitions."""
-    import random
-
-    rng = random.Random(9)
-    pairs = [
-        (f"n{rng.randrange(30):02d}", f"n{rng.randrange(30):02d}")
-        for _ in range(80)
-    ]
-    rows = [(a, b) for a, b in pairs if a != b]
-    rows = rows + [(b, a) for a, b in rows]
-    e1 = spark.createDataFrame(rows, "src string, dst string").coalesce(1)
-    e13 = spark.createDataFrame(rows, "src string, dst string").repartition(13)
-    r1 = sorted(map(tuple, label_propagation(e1, iters=3).collect()))
-    r13 = sorted(map(tuple, label_propagation(e13, iters=3).collect()))
-    assert r1 == r13
 
 
 def test_clf_model_partitioning_independent(spark):
